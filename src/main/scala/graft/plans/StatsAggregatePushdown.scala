@@ -26,18 +26,53 @@ import graft.spatial.{FileStats, GraftFileIndex}
   */
 object StatsAggregatePushdown extends Rule[LogicalPlan] {
 
-  /** Kill switch, read from the RULE's own SQLConf (not SparkSession
-    * .active — wrong session in multi-session JVMs, throws with none
-    * active on the optimizing thread) and parsed safely: a malformed
-    * value declines the rewrite instead of failing every aggregate query.
+  /** The session kill-switch of BOTH aggregate pushdowns (this rule and
+    * the DSv2 scan builder's), the reference's
+    * SparkSQLProperties.AGGREGATE_PUSH_DOWN_ENABLED (default true). Read
+    * from the caller's SQLConf (not SparkSession.active — wrong session in
+    * multi-session JVMs, none active on the optimizing thread) and parsed
+    * safely: `true`/`1` enable, anything else declines the pushdown —
+    * a malformed value never fails an aggregate query.
     */
-  private def enabled: Boolean = {
-    val v = conf.getConfString("spark.sql.graft.aggregate-push-down.enabled", "true")
+  private[graft] def enabled(conf: org.apache.spark.sql.internal.SQLConf): Boolean = {
+    val v = conf.getConfString("spark.sql.graft.aggregate-push-down.enabled", "true").trim
     v.equalsIgnoreCase("true") || v == "1"
   }
 
+  /** One aggregate answerable from per-file manifest stats; `key` is the
+    * physical stats key (`col` or `struct.leaf`).
+    */
+  private[graft] sealed trait StatAgg
+  private[graft] object StatAgg {
+    case object CountStar extends StatAgg
+    final case class CountCol(key: String) extends StatAgg
+    final case class MinCol(key: String, dt: DataType) extends StatAgg
+    final case class MaxCol(key: String, dt: DataType) extends StatAgg
+  }
+
+  /** Catalyst value of `agg` over the files' stats, or None when the stats
+    * cannot answer it exactly — the ONE evaluator of both pushdowns.
+    */
+  private[graft] def evaluate(agg: StatAgg, stats: Seq[FileStats]): Option[Any] = agg match {
+    case StatAgg.CountStar => Some(stats.map(_.rows).sum)
+    // COUNT(col) = Σ (rows − null_count(col)) — the reference's
+    // CountAggregate over null_value_counts; declines when any file lacks
+    // a null count (legacy manifest entries)
+    case StatAgg.CountCol(k) =>
+      val per = stats.map(f => f.nulls.get(k).map(n => f.rows - n))
+      if (per.exists(_.isEmpty)) None else Some(per.flatten.sum)
+    // TRUNCATED bounds (write.metadata.metrics truncate(n)) are bounds,
+    // not the exact extremes — any file flagging the column declines
+    case StatAgg.MinCol(k, dt) =>
+      if (stats.exists(_.truncated.contains(k))) None
+      else fold(stats.map(_.mins.get(k)), dt, isMin = true)
+    case StatAgg.MaxCol(k, dt) =>
+      if (stats.exists(_.truncated.contains(k))) None
+      else fold(stats.map(_.maxs.get(k)), dt, isMin = false)
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case agg @ Aggregate(Nil, aggExprs, child, _) if enabled =>
+    case agg @ Aggregate(Nil, aggExprs, child, _) if enabled(conf) =>
       unwrap(child).map { case (index, keys) =>
         val stats = index.allStats
         if (stats.isEmpty) agg
@@ -85,31 +120,21 @@ object StatsAggregatePushdown extends Rule[LogicalPlan] {
         keys.get(a.exprId).map { case (n, _) => (s"$n.${fieldName(a, ord)}", g.dataType) }
       case _ => None
     }
-    strip(e) match {
+    val statAgg: Option[StatAgg] = strip(e) match {
       case AggregateExpression(Count(Seq(Literal(_, _))), Complete, false, None, _) =>
-        Some(stats.map(_.rows).sum)
-      // COUNT(col) = Σ (rows − null_count(col)); declines when any file
-      // lacks a null count (legacy manifest entries)
+        Some(StatAgg.CountStar)
       case AggregateExpression(Count(Seq(c)), Complete, false, None, _) =>
-        statKey(c).flatMap { case (k, _) =>
-          val per = stats.map(f => f.nulls.get(k).map(n => f.rows - n))
-          if (per.exists(_.isEmpty)) None else Some(per.flatten.sum)
-        }
-      // TRUNCATED bounds (write.metadata.metrics truncate(n)) are bounds,
-      // not the exact extremes — any file flagging the column declines
+        statKey(c).map { case (k, _) => StatAgg.CountCol(k) }
       case AggregateExpression(Min(c), Complete, false, None, _) =>
-        statKey(c).flatMap { case (k, dt) =>
-          if (stats.exists(_.truncated.contains(k))) None
-          else fold(stats.map(_.mins.get(k)), dt, isMin = true) }
+        statKey(c).map { case (k, dt) => StatAgg.MinCol(k, dt) }
       case AggregateExpression(Max(c), Complete, false, None, _) =>
-        statKey(c).flatMap { case (k, dt) =>
-          if (stats.exists(_.truncated.contains(k))) None
-          else fold(stats.map(_.maxs.get(k)), dt, isMin = false) }
+        statKey(c).map { case (k, dt) => StatAgg.MaxCol(k, dt) }
       case _ => None
     }
+    statAgg.flatMap(evaluate(_, stats))
   }
 
-  /** Shared with the DSv2 pushdown ([[graft.sources.GraftScanBuilder]]).
+  /** Also the DSv2 scan's column-statistics fold.
     * `isMin` = fold to the minimum (else maximum); comparisons are exact
     * (BigDecimal / UTF8String binary order), never double arithmetic.
     */

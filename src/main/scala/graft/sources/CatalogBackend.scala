@@ -305,27 +305,49 @@ object RegistryBackend {
   def lookup(warehouse: String, parts: Seq[String]): Option[String] =
     read(warehouse).get("table." + escJoin(parts))
 
-  private def read(warehouse: String): Map[String, String] = {
-    val g = currentGen(warehouse)
-    if (g == 0) return Map.empty
-    val props = new java.util.Properties()
-    val in = Files.newInputStream(fileFor(warehouse, g))
-    try props.load(in) finally in.close()
-    import scala.jdk.CollectionConverters._
-    props.asScala.toMap
+  private def read(warehouse: String): Map[String, String] = snapshot(warehouse)._2
+
+  /** The newest generation and ITS state, read as one pair, so a writer
+    * derives the next state from exactly the generation it CASes
+    * against. A generation a faster writer pruned between listing and
+    * opening is re-listed instead of failing the caller.
+    */
+  private def snapshot(warehouse: String): (Int, Map[String, String]) = {
+    while (true) {
+      val g = currentGen(warehouse)
+      if (g == 0) return (0, Map.empty)
+      val props = new java.util.Properties()
+      try {
+        val in = Files.newInputStream(fileFor(warehouse, g))
+        try props.load(in) finally in.close()
+        import scala.jdk.CollectionConverters._
+        return (g, props.asScala.toMap)
+      } catch { case _: java.nio.file.NoSuchFileException => () }
+    }
+    throw new IllegalStateException("unreachable")
   }
+
+  /** Writer tokens of the last generations, oldest first — how a writer
+    * learns whether the newest state descends from its own publish.
+    */
+  private val LineageKey = "__lineage"
 
   /** Read-modify-write under the generation CAS: stage the full next
     * state, publish as gen+1 via hard-link create (fails if taken),
     * retry on contention. Superseded generations older than a reader
-    * window are pruned by the winner.
+    * window are pruned by the winner — which frees their NAMES: a writer
+    * stalled past the window links into a pruned number below the newest
+    * generation, and its change would vanish. A publish therefore counts
+    * only once the newest state's lineage carries its token.
     */
   private def update(warehouse: String)(
       f: Map[String, String] => Map[String, String]): Unit = {
     var attempts = 0
     while (true) {
-      val g = currentGen(warehouse)
-      val next = f(read(warehouse))
+      val (g, cur) = snapshot(warehouse)
+      val token = java.util.UUID.randomUUID().toString
+      val lineage = (cur.get(LineageKey).toSeq.flatMap(_.split(',')) :+ token).takeRight(32)
+      val next = f(cur - LineageKey) + (LineageKey -> lineage.mkString(","))
       val props = new java.util.Properties()
       next.foreach { case (k, v) => props.setProperty(k, v) }
       val target = fileFor(warehouse, g + 1)
@@ -334,18 +356,20 @@ object RegistryBackend {
       try {
         val out = Files.newOutputStream(tmp)
         try props.store(out, "graft catalog registry") finally out.close()
-        try {
-          Files.createLink(target, tmp)
+        val linked =
+          try { Files.createLink(target, tmp); true }
+          catch { case _: java.nio.file.FileAlreadyExistsException => false }
+        if (linked && snapshot(warehouse)._2.get(LineageKey)
+            .exists(_.split(',').contains(token))) {
           // winner prunes a superseded window (readers mid-listing keep a few)
           ((g - 16) to (g - 8)).filter(_ > 0)
             .foreach(k => Files.deleteIfExists(fileFor(warehouse, k)))
           return
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            attempts += 1
-            if (attempts > 50) throw new IllegalStateException(
-              s"registry CAS at $warehouse lost ${attempts} races; giving up")
         }
+        if (linked) Files.deleteIfExists(target) // a stale publish into a pruned slot
+        attempts += 1
+        if (attempts > 50) throw new IllegalStateException(
+          s"registry CAS at $warehouse lost ${attempts} races; giving up")
       } finally Files.deleteIfExists(tmp)
     }
   }

@@ -1,9 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.SQLContext
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider}
+import org.apache.spark.sql.sources.DataSourceRegister
 
-import graft.spatial.{Geo, GeometryFields, GeoTable, Snapshots, TableSchema}
+import graft.spatial.{Geo, Snapshots}
 
 /** `spark.read.format("graft").load(path)` — the connector face of the
   * engine (the reference registers `havasu.iceberg` the same way:
@@ -28,25 +27,18 @@ import graft.spatial.{Geo, GeometryFields, GeoTable, Snapshots, TableSchema}
   * Fidelity: the format read ALWAYS equals [[Snapshots.read]] — the
   * reference's connector applies delete files unconditionally at read
   * (`RowDataReader.java:95` + `DeleteFilter` in /root/reference), and so
-  * does this one. Tables with no pending merge-on-read state, no declared
-  * geometry encodings, and no schema evolution (the common case at scale:
-  * compaction clears MoR state) go through the native vectorized
-  * HadoopFsRelation path with zero overhead; tables with pending state go
-  * through a [[SnapshotRelation]] that applies MoR predicate / positional /
-  * equality deletes, decodes declared encodings, and projects the evolved
-  * logical schema — paying the same read-amplification the reference's
-  * DeleteFilter pays, and still file-pruning through the manifest index.
+  * does this one. The format is DSv2 only and resolves to [[GraftTable]]:
+  * files with no pending delete state and no declared geometry encodings
+  * take the native vectorized columnar path; files with pending
+  * merge-on-read predicate / positional / equality deletes take the
+  * wrapped row path, which applies them per file. There is no V1
+  * relation: listing `graft` in `spark.sql.sources.useV1SourceList`
+  * makes Spark reject the format.
   */
-class GraftSource extends RelationProvider with DataSourceRegister
+class GraftSource extends DataSourceRegister
     with org.apache.spark.sql.connector.catalog.TableProvider {
 
   override def shortName(): String = "graft"
-
-  // ---- DSv2 (default): format("graft") resolves to GraftTable — clean
-  // files take the columnar vectorized path, files with pending MoR state
-  // or declared encodings take the wrapped row path (no V1 .rdd escape
-  // hatch, no InternalRow→Row→InternalRow double conversion). Setting
-  // spark.sql.sources.useV1SourceList=graft falls back to the V1 relation.
 
   override def inferSchema(
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
@@ -144,43 +136,6 @@ class GraftSource extends RelationProvider with DataSourceRegister
         }
         Snapshots.versionAsOfTimestamp(path, millis)
       })
-
-  // ---- V1 fallback (spark.sql.sources.useV1SourceList=graft) -------------
-
-  override def createRelation(
-      sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
-    val spark = sqlContext.sparkSession
-    Geo.install(spark)
-    val path = parameters.getOrElse("path",
-      throw new IllegalArgumentException("format(\"graft\") requires a path"))
-    // the V1 relation has no incremental planning: fail loudly instead of
-    // serving the FULL table where the V2 path serves only the window
-    val incr = parameters.keys.map(_.toLowerCase)
-      .filter(Set("start-version", "start-snapshot-id", "start-timestamp",
-        "end-version", "end-snapshot-id", "end-timestamp"))
-    if (incr.nonEmpty) throw new IllegalArgumentException(
-      s"incremental read options (${incr.mkString(", ")}) are not supported on the " +
-        "V1 fallback path (spark.sql.sources.useV1SourceList=graft)")
-    parameters.get("metadata") match {
-      case Some(name) =>
-        // metadata tables are O(#files) driver-side rows — a TableScan
-        // relation over the computed frame (Iceberg's `tbl.files` surface)
-        new MetadataRelation(sqlContext,
-          Snapshots.metadataTable(spark, path, name, resolveVersion(path, parameters.get)))
-      case None =>
-        // `version` time travel, or `ref`/`branch`/`tag` by name
-        val version = resolveVersion(path, parameters.get)
-        val clean =
-          Snapshots.readDeletes(path, version).isEmpty &&
-            Snapshots.readPosDeletes(path, version).isEmpty &&
-            Snapshots.readEqDeletes(path, version).isEmpty &&
-            GeometryFields.get(path).isEmpty &&
-            !TableSchema.exists(path)
-        if (clean) GeoTable.buildRelation(spark, path, Snapshots.readManifest(path, version))
-        else new SnapshotRelation(sqlContext, path, version)
-    }
-  }
 }
 
 /** Driver-computed metadata frame served as a DSv2 LocalScan (becomes a
@@ -205,64 +160,4 @@ private[sources] class GraftMetadataTable(df: org.apache.spark.sql.DataFrame, tn
             df.queryExecution.executedPlan.executeCollect()
         }
     }
-}
-
-/** Full-fidelity relation for tables with pending MoR state, declared
-  * geometry encodings, or evolved schemas: delegates to [[Snapshots.read]]
-  * (which applies all of those) and hands Spark's pushed column pruning +
-  * filters down into that plan — so manifest file pruning and parquet
-  * row-group pruning still happen; Spark re-applies every filter above
-  * (V1 sources may return supersets), so partial translation is safe.
-  */
-private[sources] class SnapshotRelation(
-    override val sqlContext: SQLContext,
-    path: String,
-    version: Option[Int])
-    extends BaseRelation with org.apache.spark.sql.sources.PrunedFilteredScan {
-
-  import org.apache.spark.sql.{functions => F, Column, DataFrame}
-  import org.apache.spark.sql.sources._
-
-  private def snapshot: DataFrame = Snapshots.read(sqlContext.sparkSession, path, version)
-
-  override val schema: org.apache.spark.sql.types.StructType = snapshot.schema
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val base = filters.flatMap(translate).foldLeft(snapshot)((d, c) => d.filter(c))
-    val projected =
-      if (requiredColumns.isEmpty) base.select() // count(*) shape: 0-col rows
-      else base.select(requiredColumns.map(F.col).toIndexedSeq: _*)
-    projected.rdd
-  }
-
-  /** Best-effort V1 Filter → Column. None = not pushed (outer re-filter
-    * keeps correctness); a translated conjunct reaches the manifest index
-    * and the parquet scan through the inner plan.
-    */
-  private def translate(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(F.col(a) === F.lit(v))
-    case GreaterThan(a, v) => Some(F.col(a) > F.lit(v))
-    case GreaterThanOrEqual(a, v) => Some(F.col(a) >= F.lit(v))
-    case LessThan(a, v) => Some(F.col(a) < F.lit(v))
-    case LessThanOrEqual(a, v) => Some(F.col(a) <= F.lit(v))
-    case In(a, vs) => Some(F.col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a) => Some(F.col(a).isNull)
-    case IsNotNull(a) => Some(F.col(a).isNotNull)
-    case StringStartsWith(a, v) => Some(F.col(a).startsWith(v))
-    case StringEndsWith(a, v) => Some(F.col(a).endsWith(v))
-    case StringContains(a, v) => Some(F.col(a).contains(v))
-    case And(l, r) => for (a <- translate(l); b <- translate(r)) yield a && b
-    case Or(l, r) => for (a <- translate(l); b <- translate(r)) yield a || b
-    case Not(c) => translate(c).map(!_)
-    case _ => None
-  }
-}
-
-private[sources] class MetadataRelation(
-    override val sqlContext: SQLContext,
-    df: org.apache.spark.sql.DataFrame)
-    extends BaseRelation with org.apache.spark.sql.sources.TableScan {
-  override def schema: org.apache.spark.sql.types.StructType = df.schema
-  override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = df.rdd
 }

@@ -67,8 +67,8 @@ class GraftTable(val path: String, val snapshotVersion: Option[Int],
     s"graft.`$path`" + branch.map(b => s"@branch_$b").orElse(tag.map(t => s"@tag_$t")).getOrElse("")
 
   // the LOGICAL read schema — exactly what Snapshots.read serves (decoded
-  // geometries, renames applied); plan construction is manifest-only
-  override lazy val schema: StructType = Snapshots.read(spark, path, snapshotVersion).schema
+  // geometries, renames applied), derived from metadata alone
+  override lazy val schema: StructType = Snapshots.schema(spark, path, snapshotVersion)
 
   override def capabilities(): util.Set[TableCapability] =
     if (tag.isDefined) util.EnumSet.of(TableCapability.BATCH_READ) // tags never move: read-only
@@ -549,11 +549,9 @@ class GraftScanBuilder(spark: SparkSession, path: String, version: Option[Int],
   private var lastAgg: (Aggregation, Option[(StructType, Array[InternalRow])]) = _
 
   private def evalCached(agg: Aggregation): Option[(StructType, Array[InternalRow])] = {
-    // session kill-switch, the reference's
-    // SparkSQLProperties.AGGREGATE_PUSH_DOWN_ENABLED (default true) —
-    // lets users force a real scan when auditing results
-    if (!spark.conf.getOption("spark.sql.graft.aggregate-push-down.enabled")
-        .forall(_.toBoolean)) return None
+    // the session kill-switch shared with the V1 rule — lets users force
+    // a real scan when auditing results
+    if (!graft.plans.StatsAggregatePushdown.enabled(spark.sessionState.conf)) return None
     val last = lastAgg
     if (last != null && (last._1 eq agg)) last._2
     else { val r = evalAggregation(agg); lastAgg = (agg, r); r }
@@ -627,44 +625,30 @@ class GraftScanBuilder(spark: SparkSession, path: String, version: Option[Int],
           }.map(phys -> _)
         case _ => None
       }
+    // each aggregate as a manifest-stats aggregate with its result field;
+    // the shared evaluator folds it per group of files
+    import graft.plans.StatsAggregatePushdown.{evaluate, StatAgg}
+    val statAggs: Seq[(StructField, StatAgg)] = agg.aggregateExpressions.toSeq.map {
+      case _: CountStar =>
+        Some(StructField("count(*)", LongType, nullable = false) -> StatAgg.CountStar)
+      case m: Min => key(m.column).map { case (k, dt) =>
+        StructField(s"min($k)", dt) -> StatAgg.MinCol(k, dt) }
+      case m: Max => key(m.column).map { case (k, dt) =>
+        StructField(s"max($k)", dt) -> StatAgg.MaxCol(k, dt) }
+      case c: org.apache.spark.sql.connector.expressions.aggregate.Count if !c.isDistinct =>
+        key(c.column).map { case (k, _) =>
+          StructField(s"count($k)", LongType, nullable = false) -> StatAgg.CountCol(k) }
+      case _ => return None
+    }.map(_.getOrElse(return None))
     // aggregate values over one group of files; None = not answerable
-    def valuesOver(gstats: Seq[graft.spatial.FileStats]): Option[Seq[(StructField, Any)]] = {
-      val vs = agg.aggregateExpressions.toSeq.map {
-        case _: CountStar =>
-          Some((StructField("count(*)", LongType, nullable = false),
-            gstats.map(_.rows).sum: Any))
-        // truncated bounds (write.metadata.metrics truncate(n)) are
-        // bounds, not exact extremes — decline like the logical-plan rule
-        case m: Min => key(m.column).flatMap { case (k, dt) =>
-          if (gstats.exists(_.truncated.contains(k))) None
-          else graft.plans.StatsAggregatePushdown.fold(gstats.map(_.mins.get(k)), dt,
-            isMin = true).map(v => (StructField(s"min($k)", dt), v))
-        }
-        case m: Max => key(m.column).flatMap { case (k, dt) =>
-          if (gstats.exists(_.truncated.contains(k))) None
-          else graft.plans.StatsAggregatePushdown.fold(gstats.map(_.maxs.get(k)), dt,
-            isMin = false).map(v => (StructField(s"max($k)", dt), v))
-        }
-        // COUNT(col) = Σ (rows − null_count(col)) — answerable whenever
-        // every file carries a null count for the column (the reference's
-        // CountAggregate over null_value_counts); legacy entries without
-        // counts decline
-        case c: org.apache.spark.sql.connector.expressions.aggregate.Count
-            if !c.isDistinct =>
-          key(c.column).flatMap { case (k, _) =>
-            val per = gstats.map(f => f.nulls.get(k).map(n => f.rows - n))
-            if (per.exists(_.isEmpty)) None
-            else Some((StructField(s"count($k)", LongType, nullable = false),
-              per.flatten.sum: Any))
-          }
-        case _ => None
-      }
+    def valuesOver(gstats: Seq[graft.spatial.FileStats]): Option[Seq[Any]] = {
+      val vs = statAggs.map { case (_, a) => evaluate(a, gstats) }
       if (vs.exists(_.isEmpty)) None else Some(vs.map(_.get))
     }
     val gcs = groupCols.get
     if (gcs.isEmpty) {
       valuesOver(stats).map(vs =>
-        (StructType(vs.map(_._1)), Array(InternalRow.fromSeq(vs.map(_._2)))))
+        (StructType(statAggs.map(_._1)), Array(InternalRow.fromSeq(vs))))
     } else {
       // group key per file from its dir tuple; any missing segment or
       // uncastable value makes grouping undecidable → decline
@@ -682,30 +666,24 @@ class GraftScanBuilder(spark: SparkSession, path: String, version: Option[Int],
         }
         gk.map(_.get) -> f
       }
-      val groups = keyed.groupBy(_._1).toSeq
-      val folded = groups.map { case (gvals, files) =>
+      val rows = keyed.groupBy(_._1).toSeq.map { case (gvals, files) =>
         valuesOver(files.map(_._2)) match {
           case None => return None
-          case Some(vs) => (gvals, vs)
+          case Some(vs) => InternalRow.fromSeq(gvals ++ vs)
         }
       }
-      val rows = folded.map { case (gvals, vs) =>
-        InternalRow.fromSeq(gvals ++ vs.map(_._2)) }
       // schema: group columns first, then aggregates (the layout Spark's
-      // pushdown rewrite expects); aggregate fields come from the groups
-      // already folded — no second whole-manifest fold
-      val aggFields = folded.headOption.map(_._2.map(_._1))
-        .orElse(valuesOver(stats).map(_.map(_._1))) // zero groups: empty table
-        .getOrElse(return None)
+      // pushdown rewrite expects)
       val schema = StructType(
-        gcs.map { case (c, dt) => StructField(c, dt) } ++ aggFields)
+        gcs.map { case (c, dt) => StructField(c, dt) } ++ statAggs.map(_._1))
       Some((schema, rows.toArray))
     }
   } catch { case _: Exception => None }
 
   override def build(): Scan = aggResult match {
     case Some((aggSchema, rows)) => GraftLocalAggScan(aggSchema, rows)
-    case None => new GraftScan(spark, path, effVersion, required, pushed,
+    case None => new GraftScan(spark, path, effVersion,
+      new GraftScan.TableState(spark, path, effVersion, logicalSchema), required, pushed,
       exactFilters = claimed.toArray, limit = limit,
       streamOptions = {
         import scala.jdk.CollectionConverters._
@@ -731,6 +709,10 @@ case class GraftLocalAggScan(aggSchema: StructType, rows: Array[InternalRow])
   * its derived conjuncts would otherwise never reach the manifest index.
   */
 class GraftScan(spark: SparkSession, path: String, version: Option[Int],
+    /** Table-level state resolved once from metadata; the copies
+      * `withMorePruning` / `withExtraReadColumn` make share it.
+      */
+    table: GraftScan.TableState,
     required: StructType, pushed: Array[sources.Filter],
     val pruneFilters: Array[sources.Filter] = Array.empty,
     /** Filters the builder CLAIMED as fully pushed (exact identity-
@@ -761,6 +743,10 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
     with SupportsReportStatistics with SupportsRuntimeV2Filtering
     with SupportsReportPartitioning {
 
+  import table.{encodings, eqDeletes, fullSchemaFields, logicalFull, logicalToPhysical,
+    morConds, partCols, physicalDataSchema, posCov, posCovBySuffix, posRefs, resolveEqCol,
+    schemaEntries}
+
   /** `spark.readStream.table("cat.db.t")` — the reference's
     * `SparkTable.java:105-109` advertises MICRO_BATCH_READ on catalog
     * identifiers. Offsets/admission come from the committed-chain stream;
@@ -790,7 +776,7 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
     val known = (pushed ++ pruneFilters).toSet
     val fresh = extra.filterNot(known)
     if (fresh.isEmpty) this
-    else new GraftScan(spark, path, version, required, pushed, pruneFilters ++ fresh,
+    else new GraftScan(spark, path, version, table, required, pushed, pruneFilters ++ fresh,
       exactFilters, limit, streamOptions, incrementalFiles, metaCols)
   }
 
@@ -805,60 +791,16 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
   def withExtraReadColumn(name: String): Option[GraftScan] =
     if (required.fieldNames.contains(name) || partCols.contains(name)) None
     else logicalFull.fields.find(_.name == name).map { f =>
-      new GraftScan(spark, path, version, StructType(required.fields :+ f),
+      new GraftScan(spark, path, version, table, StructType(required.fields :+ f),
         pushed, pruneFilters, exactFilters, limit, streamOptions,
         incrementalFiles, metaCols)
     }
 
-  private val partCols = GeoTable.readPartitionCols(path)
-  private val schemaEntries: Seq[TableSchema.Entry] = TableSchema.read(path)
-  private val logicalToPhysical: Map[String, String] =
-    schemaEntries.filterNot(_.dropped).map(e => e.logical -> e.physical).toMap
-  private val encodings = GeometryFields.get(path)
-
-  // full physical file schema (for parquet footer matching)
-  private val physicalDataSchema: StructType = {
-    val full = GeoTable.ensureSchema(spark, path)
-    // nullable for the same reason as the V1 path: a column added by a
-    // later schema merge is required-missing in older files otherwise
-    Snapshots.nullableShallow(TableSchema.physicalSchema(path).getOrElse(
-      StructType(full.fields.filterNot(f => partCols.contains(f.name)))))
-  }
-  private val fullSchemaFields =
-    GeoTable.readSchema(path).map(_.fields.toSeq).getOrElse(physicalDataSchema.fields.toSeq)
-
-  // MoR predicate deletes must be evaluable even when their columns are
-  // pruned away — extend the read with those logical columns and drop
-  // them after filtering
-  private val morConds: Seq[String] =
-    if (Snapshots.currentVersion(path) == 0) Nil else Snapshots.readDeletes(path, version)
-  private val eqDeletes = if (Snapshots.currentVersion(path) == 0) Nil
-    else Snapshots.readEqDeletes(path, version)
-  private val logicalFull: StructType = Snapshots.read(spark, path, version).schema
-
+  // delete-referenced columns the projection pruned away
   private val extraCols: Seq[String] = {
-    val needed = scala.collection.mutable.LinkedHashSet.empty[String]
     val have = required.fieldNames.toSet
-    def refs(sql: String): Seq[String] = try {
-      spark.sessionState.sqlParser.parseExpression(sql).collect {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.name
-      }
-    } catch { case _: Exception => Nil }
-    (morConds.flatMap(refs) ++ eqDeletes.flatMap(_.cols).flatMap(resolveEqCol))
-      .filter(c => logicalFull.fieldNames.contains(c) && !have(c))
-      .foreach(needed += _)
-    needed.toSeq
+    table.deleteCols.filterNot(have)
   }
-
-  /** An equality-delete key column under the CURRENT logical schema —
-    * ONE resolver seat with the V1 read path
-    * ([[graft.spatial.TableSchema.resolveDeleteCol]]: physical match
-    * first, current-name fallback for legacy entries). None =
-    * unresolvable either way — [[bindEqSpec]] fails loudly on it.
-    */
-  private def resolveEqCol(c: String): Option[String] =
-    graft.spatial.TableSchema.resolveDeleteCol(schemaEntries, c,
-      logicalFull.fieldNames.toSet)
 
   /** Logical fields actually read: required ++ delete-referenced extras,
     * data fields first, partition fields last (the DSv2 file-scan layout).
@@ -1206,16 +1148,6 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
     }
   }
 
-  // ---- delete-file METADATA (never rows) resolved once at planning ------
-
-  private lazy val posRefs: Seq[DeleteFileRef] =
-    if (Snapshots.currentVersion(path) == 0) Nil
-    else DeleteFiles.refs(spark, path, Snapshots.readPosDeletes(path, version))
-  private lazy val posCov: Map[String, Seq[DeleteFileRef]] =
-    DeleteFiles.posCoverage(spark, path, posRefs)
-  // shared suffix-fallback construction — see [[DeleteFiles.suffixIndex]]
-  private lazy val posCovBySuffix: Map[String, Seq[DeleteFileRef]] =
-    DeleteFiles.suffixIndex(posCov)
   /** Bind one equality delete's key ordinals against THIS scan's row
     * layout (pruned/projected logical data ++ partition columns) — the
     * layout its reader factory emits. The catalog micro-batch stream
@@ -1487,6 +1419,58 @@ class ResultDeleteFilesMetric extends org.apache.spark.sql.connector.metric.Cust
 object GraftScan {
   import org.apache.spark.sql.catalyst.CatalystTypeConverters
   import org.apache.spark.sql.connector.expressions.{Expression => VExpr, Literal => VLiteral}
+
+  /** What a scan resolves once per table load from metadata: the logical
+    * schema (passed down from the table), the physical layout, the
+    * evolution log, declared encodings, and the delete state of the
+    * scanned snapshot. Delete-file METADATA only, never rows.
+    */
+  private[sources] final class TableState(spark: SparkSession, path: String,
+      version: Option[Int], val logicalFull: StructType) {
+    val partCols: Seq[String] = GeoTable.readPartitionCols(path)
+    val schemaEntries: Seq[TableSchema.Entry] = TableSchema.read(path)
+    val logicalToPhysical: Map[String, String] =
+      schemaEntries.filterNot(_.dropped).map(e => e.logical -> e.physical).toMap
+    val encodings: Map[String, String] = GeometryFields.get(path)
+    // full physical file schema (for parquet footer matching), nullable
+    // like the V1 relation's
+    val physicalDataSchema: StructType = GeoTable.relationSchemas(spark, path)._1
+    val fullSchemaFields: Seq[org.apache.spark.sql.types.StructField] =
+      GeoTable.readSchema(path).map(_.fields.toSeq).getOrElse(physicalDataSchema.fields.toSeq)
+    private val hasSnapshot = Snapshots.currentVersion(path) != 0
+    // MoR predicate deletes must be evaluable even when their columns are
+    // pruned away — scans extend the read with those logical columns and
+    // drop them after filtering
+    val morConds: Seq[String] = if (hasSnapshot) Snapshots.readDeletes(path, version) else Nil
+    val eqDeletes: Seq[graft.spatial.EqDelete] =
+      if (hasSnapshot) Snapshots.readEqDeletes(path, version) else Nil
+    /** An equality-delete key column under the CURRENT logical schema —
+      * ONE resolver seat with the V1 read path
+      * ([[graft.spatial.TableSchema.resolveDeleteCol]]: physical match
+      * first, current-name fallback for legacy entries). None =
+      * unresolvable either way — `bindEqSpec` fails loudly on it.
+      */
+    def resolveEqCol(c: String): Option[String] =
+      TableSchema.resolveDeleteCol(schemaEntries, c, logicalFull.fieldNames.toSet)
+    /** Logical columns the pending deletes reference, in first-use order. */
+    lazy val deleteCols: Seq[String] = {
+      def refs(sql: String): Seq[String] = try {
+        spark.sessionState.sqlParser.parseExpression(sql).collect {
+          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.name
+        }
+      } catch { case _: Exception => Nil }
+      (morConds.flatMap(refs) ++ eqDeletes.flatMap(_.cols).flatMap(resolveEqCol))
+        .filter(logicalFull.fieldNames.contains).distinct
+    }
+    lazy val posRefs: Seq[DeleteFileRef] =
+      if (hasSnapshot) DeleteFiles.refs(spark, path, Snapshots.readPosDeletes(path, version))
+      else Nil
+    lazy val posCov: Map[String, Seq[DeleteFileRef]] =
+      DeleteFiles.posCoverage(spark, path, posRefs)
+    // shared suffix-fallback construction — see [[DeleteFiles.suffixIndex]]
+    lazy val posCovBySuffix: Map[String, Seq[DeleteFileRef]] =
+      DeleteFiles.suffixIndex(posCov)
+  }
 
   private[sources] case class DriverMetric(metricName: String, metricValue: Long)
       extends org.apache.spark.sql.connector.metric.CustomTaskMetric {

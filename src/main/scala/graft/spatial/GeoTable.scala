@@ -221,19 +221,22 @@ object GeoTable {
       v => manifestJson(stats.map(_.withAddedV(v)), Nil, partitionCols, schema = sch))
   }
 
-  /** Read a geo table through the stats-pruning [[GraftFileIndex]],
-    * applying any merge-on-read delete predicates of the current snapshot.
+  /** Read the current snapshot with every delete kind applied — the same
+    * read as [[Snapshots.read]], kept under this name for callers that
+    * know the table as a geo table.
     */
-  def read(spark: SparkSession, path: String): DataFrame =
-    applyDeletes(readWithStats(spark, path, readManifest(path)), readDeletes(path))
+  def read(spark: SparkSession, path: String): DataFrame = Snapshots.read(spark, path)
 
   /** Apply MoR predicate deletes: keep rows where no predicate holds. */
   private[graft] def applyDeletes(df: DataFrame, deletes: Seq[String]): DataFrame =
     deletes.foldLeft(df)((d, sql) => d.filter(!coalesce(expr(sql), lit(false))))
 
-  /** Read a specific file set (snapshot) through the pruning index; any
-    * declared geometry encodings decode back to the WKB runtime repr (the
-    * bbox shadow column drives pruning either way).
+  /** Read a file set through the pruning index BEFORE any delete applies:
+    * the raw reader under [[Snapshots.read]], and the one for callers that
+    * need pre-delete rows (`readWithPositions`, `changes`, Similarity's
+    * delete capture). Declared geometry encodings decode back to the WKB
+    * runtime repr (the bbox shadow column drives pruning either way) and
+    * the frame carries exactly [[logicalSchema]].
     */
   def readWithStats(spark: SparkSession, path: String, stats: Seq[FileStats]): DataFrame = {
     GeoSql.install(spark)
@@ -247,12 +250,27 @@ object GeoTable {
     TableSchema.toLogical(decoded, path)
   }
 
-  /** The pruning-FileIndex-backed relation (shared with format("graft")).
-    * For partitioned tables the inferred schema's partition columns move to
-    * the relation's `partitionSchema` and their values are served from the
-    * file paths by [[GraftFileIndex]].
+  /** The schema [[readWithStats]] serves, derived step by step from
+    * metadata alone: the relation's data + partition merge (Spark's own
+    * rule), each declared geometry column decoded to a nullable BINARY
+    * without metadata, then [[TableSchema.logicalSchema]].
     */
-  def buildRelation(spark: SparkSession, path: String, stats: Seq[FileStats]): HadoopFsRelation = {
+  private[spatial] def logicalSchema(spark: SparkSession, path: String): StructType = {
+    val (data, part) = relationSchemas(spark, path)
+    val raw = org.apache.spark.sql.execution.datasources.PartitioningUtils
+      .mergeDataAndPartitionSchema(data, part, spark.sessionState.conf.caseSensitiveAnalysis)._1
+    val encoded = GeometryFields.get(path)
+    val decoded = StructType(raw.fields.map(f =>
+      if (encoded.contains(f.name)) StructField(f.name, BinaryType) else f))
+    TableSchema.logicalSchema(decoded, TableSchema.read(path))
+  }
+
+  /** (data, partition) schemas of the pruning relation, from metadata
+    * alone. For partitioned tables the stored schema's partition columns
+    * move to the partition schema; their values are served from the file
+    * paths by [[GraftFileIndex]].
+    */
+  private[graft] def relationSchemas(spark: SparkSession, path: String): (StructType, StructType) = {
     // authoritative schema from the manifest — relation construction makes
     // ZERO object-store round-trips (no listing, no footer sampling); the
     // inference fallback exists only for legacy manifests without a schema
@@ -266,6 +284,12 @@ object GeoTable {
     // missing from a file is a reader ERROR, not nulls
     val dataSchema = Snapshots.nullableShallow(TableSchema.physicalSchema(path).getOrElse(
       StructType(full.fields.filterNot(f => partCols.contains(f.name)))))
+    (dataSchema, partitionSchema)
+  }
+
+  /** The pruning-FileIndex-backed relation under [[readWithStats]]. */
+  def buildRelation(spark: SparkSession, path: String, stats: Seq[FileStats]): HadoopFsRelation = {
+    val (dataSchema, partitionSchema) = relationSchemas(spark, path)
     val index = new GraftFileIndex(spark, new Path(path), stats, dataSchema, partitionSchema,
       readPruningSpecs(path))
     // a bucket transform doubles as a Spark bucket spec: file names carry
@@ -295,10 +319,7 @@ object GeoTable {
   def filesTable(spark: SparkSession, path: String,
       version: Option[Int] = None): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val stats = version match {
-      case Some(v) => Snapshots.readManifest(path, Some(v))
-      case None => readManifest(path)
-    }
+    val stats = Snapshots.readManifest(path, version)
     // leaf set = UNION across files: stat key sets legitimately diverge
     // (add_files-imported plain parquet next to geo appends), and a file
     // without a key serves null — a direct apply would crash the table
@@ -473,12 +494,14 @@ object GeoTable {
     s"""{"version":1,"deletes":$del,"partitions":$parts$ph,"posDeletes":$pdel,"eqDeletes":$edel,"props":$pr$sch,"files":[${files.mkString(",")}]}"""
   }
 
-  def readManifest(path: String): Seq[FileStats] =
-    parseManifest(new String(Files.readAllBytes(Paths.get(path, ManifestName)), StandardCharsets.UTF_8))
-
-  /** Merge-on-read delete predicates of the current manifest. */
-  def readDeletes(path: String): Seq[String] =
-    parseDeletes(new String(Files.readAllBytes(Paths.get(path, ManifestName)), StandardCharsets.UTF_8))
+  /** One manifest document, parsed once: file entries, the three delete
+    * kinds, partition layout and the persisted schema. [[Snapshots]]
+    * memoizes it per published version; the mirror's table-level fields
+    * are memoized by [[mirrorMeta]].
+    */
+  private[graft] final case class Manifest(files: Seq[FileStats], deletes: Seq[String],
+      posDeletes: Seq[String], eqDeletes: Seq[EqDelete], partitions: Seq[String],
+      partitionHistory: Seq[String], schema: Option[StructType])
 
   /** Parsed table-level metadata of the MIRROR manifest, memoized by
     * (path, size, mtime): one DSv2 planning pass consults the partition
@@ -516,11 +539,10 @@ object GeoTable {
       val cached = MirrorMetaCache.get(key)
       if (cached != null) Some(cached)
       else {
-        val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        val m = MirrorMeta(parsePartitionCols(txt), parsePartitionHistory(txt),
-          parseSchema(txt))
-        MirrorMetaCache.put(key, m)
-        Some(m)
+        val m = parseManifest(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+        val meta = MirrorMeta(m.partitions, m.partitionHistory, m.schema)
+        MirrorMetaCache.put(key, meta)
+        Some(meta)
       }
     }
   }
@@ -536,15 +558,6 @@ object GeoTable {
   /** Retired partition spec strings (partition-spec evolution history). */
   def readPartitionHistory(path: String): Seq[String] =
     mirrorMeta(path).map(_.history).getOrElse(Nil)
-
-  private[graft] def parsePartitionHistory(txt: String): Seq[String] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    (JsonMethods.parse(txt) \ "partitionHistory") match {
-      case JArray(ps) => ps.collect { case JString(c) => c }
-      case _ => Nil
-    }
-  }
 
   /** Transforms for PLANNING-time pruning: the current spec plus every
     * retired generation. Projection pruning is per-file self-describing —
@@ -569,44 +582,6 @@ object GeoTable {
     }
   }
 
-  /** Equality delete files with their sequence (commit version) scoping. */
-  private[spatial] def parseEqDeletes(txt: String): Seq[EqDelete] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    (JsonMethods.parse(txt) \ "eqDeletes") match {
-      case JArray(ds) => ds.collect {
-        case JObject(kv) =>
-          val m = kv.toMap
-          val JString(f) = m("path")
-          val cols = m("cols") match {
-            case JArray(cs) => cs.collect { case JString(c) => c }
-            case _ => Nil
-          }
-          val seq = m.get("seq") match {
-            case Some(JInt(v)) => v.toInt
-            case _ => 0 // legacy manifest: applies to all files
-          }
-          EqDelete(f, cols, seq)
-      }
-      case _ => Nil
-    }
-  }
-
-  /** Authoritative full table schema (data + partition columns) persisted
-    * in the manifest at write time — None only for legacy manifests.
-    */
-  private[graft] def parseSchema(txt: String): Option[StructType] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    (JsonMethods.parse(txt) \ "schema") match {
-      case JNothing | JNull => None
-      case j => DataType.fromJson(JsonMethods.compact(JsonMethods.render(j))) match {
-        case s: StructType => Some(s)
-        case _ => None
-      }
-    }
-  }
-
   /** Schema of the CURRENT manifest (main head). */
   def readSchema(path: String): Option[StructType] =
     mirrorMeta(path).flatMap(_.schema)
@@ -625,35 +600,8 @@ object GeoTable {
       inferred
     }
 
-  /** Positional delete files (`(file_path, pos)` parquet) of a manifest. */
-  private[spatial] def parsePosDeletes(txt: String): Seq[String] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    (JsonMethods.parse(txt) \ "posDeletes") match {
-      case JArray(ds) => ds.collect { case JString(d) => d }
-      case _ => Nil
-    }
-  }
-
-  private[spatial] def parsePartitionCols(txt: String): Seq[String] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    (JsonMethods.parse(txt) \ "partitions") match {
-      case JArray(ps) => ps.collect { case JString(c) => c }
-      case _ => Nil
-    }
-  }
-
-  private[spatial] def parseDeletes(txt: String): Seq[String] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    (JsonMethods.parse(txt) \ "deletes") match {
-      case JArray(ds) => ds.collect { case JString(d) => d }
-      case _ => Nil
-    }
-  }
-
-  private[spatial] def parseManifest(txt: String): Seq[FileStats] = {
+  /** The whole manifest in one json4s pass. */
+  private[spatial] def parseManifest(txt: String): Manifest = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     // BigDecimal parsing: a decimal(p>15) column's min/max must not round
@@ -673,7 +621,11 @@ object GeoTable {
       case JNull => null
       case other => other.toString
     }
-    (j \ "files") match {
+    def strings(v: JValue): Seq[String] = v match {
+      case JArray(xs) => xs.collect { case JString(x) => x }
+      case _ => Nil
+    }
+    val files = (j \ "files") match {
       case JArray(fs) => fs.map { f =>
         val JString(p) = f \ "path"
         val rows = toScala(f \ "rows").asInstanceOf[Number].longValue()
@@ -688,13 +640,34 @@ object GeoTable {
         }
         val nulls = m("nulls").collect { case (k, v: Number) => k -> v.longValue() }
         val csizes = m("csizes").collect { case (k, v: Number) => k -> v.longValue() }
-        val trunc = (f \ "trunc") match {
-          case JArray(ts) => ts.collect { case JString(t) => t }
-          case _ => Nil
-        }
-        FileStats(p, rows, size, m("mins"), m("maxs"), addedV, nulls, csizes, trunc)
+        FileStats(p, rows, size, m("mins"), m("maxs"), addedV, nulls, csizes,
+          strings(f \ "trunc"))
       }
       case _ => Nil
     }
+    // equality delete files with their sequence (commit version) scoping
+    val eqDeletes = (j \ "eqDeletes") match {
+      case JArray(ds) => ds.collect {
+        case d: JObject =>
+          val JString(f) = d \ "path"
+          val seq = (d \ "seq") match {
+            case JInt(v) => v.toInt
+            case _ => 0 // legacy manifest: applies to all files
+          }
+          EqDelete(f, strings(d \ "cols"), seq)
+      }
+      case _ => Nil
+    }
+    // authoritative full table schema (data + partition columns) persisted
+    // at write time — None only for legacy manifests
+    val schema = (j \ "schema") match {
+      case JNothing | JNull => None
+      case sj => DataType.fromJson(JsonMethods.compact(JsonMethods.render(sj))) match {
+        case st: StructType => Some(st)
+        case _ => None
+      }
+    }
+    Manifest(files, strings(j \ "deletes"), strings(j \ "posDeletes"), eqDeletes,
+      strings(j \ "partitions"), strings(j \ "partitionHistory"), schema)
   }
 }

@@ -123,9 +123,8 @@ object GeometryFields {
     * (runtime repr is WKB; storage may be any of the four — the write-side
     * analogue of `ParquetGeometryValueWriters` routing in /root/reference's
     * `SparkParquetWriters.java:270-273`). Delegates to [[GeoTable.write]]
-    * with a storage encoding; [[GeoTable.read]] and [[Snapshots.read]]
-    * decode back to WKB and keep bbox pruning (format("graft") returns the
-    * stored physical form).
+    * with a storage encoding; [[Snapshots.read]] and `format("graft")`
+    * decode back to WKB and keep bbox pruning.
     */
   def writeGeo(df: DataFrame, path: String, geomCol: String, enc: String,
       res: Int = GeoTable.DefaultResolution,

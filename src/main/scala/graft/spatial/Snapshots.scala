@@ -67,11 +67,12 @@ object Snapshots {
   // version numbers are never reused (rollback republishes FORWARD), so
   // its (path, size, mtime) fully determines the parse product. Planning
   // consults the manifest several times per query (stats report, SPJ key
-  // rows, exact-filter claims, aggregate pushdown, input partitions) and
-  // once per scan BUILD on top — at 100k files that is tens of ms of JSON
-  // + string work each; the memo makes it one parse per published
-  // version. LRU-bounded so a driver touching many tables keeps the hot
-  // set. The stat-key also invalidates on out-of-band manifest edits.
+  // rows, exact-filter claims, aggregate pushdown, input partitions, the
+  // three delete lists, the schema) and once per scan BUILD on top — at
+  // 100k files that is tens of ms of JSON + string work each; the memo
+  // makes it one parse per published version. LRU-bounded so a driver
+  // touching many tables keeps the hot set. The stat-key also
+  // invalidates on out-of-band manifest edits.
   private[graft] val manifestParseCount = new java.util.concurrent.atomic.AtomicLong
 
   /** LRU bounded by TOTAL CACHED FILE ENTRIES, not manifest count: a
@@ -84,22 +85,23 @@ object Snapshots {
     private val MaxTotalFiles = 262144L
     private val MaxEntries = 512
     private val map =
-      new java.util.LinkedHashMap[(String, Long, Long), Seq[FileStats]](64, 0.75f, true)
+      new java.util.LinkedHashMap[(String, Long, Long), GeoTable.Manifest](64, 0.75f, true)
     private var totalFiles = 0L
-    def get(k: (String, Long, Long)): Seq[FileStats] = synchronized { map.get(k) }
-    def put(k: (String, Long, Long), v: Seq[FileStats]): Unit = synchronized {
+    def get(k: (String, Long, Long)): GeoTable.Manifest = synchronized { map.get(k) }
+    def put(k: (String, Long, Long), v: GeoTable.Manifest): Unit = synchronized {
       val prev = map.put(k, v)
-      totalFiles += v.size.toLong - (if (prev == null) 0L else prev.size.toLong)
+      totalFiles += v.files.size.toLong - (if (prev == null) 0L else prev.files.size.toLong)
       val it = map.entrySet().iterator()
       while ((totalFiles > MaxTotalFiles || map.size() > MaxEntries) &&
           map.size() > 1 && it.hasNext) {
         val e = it.next()
-        if (e.getKey != k) { totalFiles -= e.getValue.size.toLong; it.remove() }
+        if (e.getKey != k) { totalFiles -= e.getValue.files.size.toLong; it.remove() }
       }
     }
   }
 
-  def readManifest(path: String, version: Option[Int] = None): Seq[FileStats] = {
+  /** The parsed manifest of a snapshot (default: main head). */
+  private def manifest(path: String, version: Option[Int]): GeoTable.Manifest = {
     val v = version.getOrElse(mainVersion(path))
     require(v > 0, s"no snapshots at $path")
     val p = manifestPath(path, v)
@@ -114,21 +116,24 @@ object Snapshots {
     parsed
   }
 
+  def readManifest(path: String, version: Option[Int] = None): Seq[FileStats] =
+    manifest(path, version).files
+
   /** Merge-on-read delete predicates of a snapshot. */
   def readDeletes(path: String, version: Option[Int] = None): Seq[String] =
-    GeoTable.parseDeletes(manifestText(path, version))
+    manifest(path, version).deletes
 
   /** Positional delete files of a snapshot. */
   def readPosDeletes(path: String, version: Option[Int] = None): Seq[String] =
-    GeoTable.parsePosDeletes(manifestText(path, version))
+    manifest(path, version).posDeletes
 
   /** Equality delete files of a snapshot (with sequence-number scoping). */
   def readEqDeletes(path: String, version: Option[Int] = None): Seq[EqDelete] =
-    GeoTable.parseEqDeletes(manifestText(path, version))
+    manifest(path, version).eqDeletes
 
   /** Persisted schema of a snapshot (None for legacy manifests). */
   def readSchema(path: String, version: Option[Int] = None): Option[org.apache.spark.sql.types.StructType] =
-    GeoTable.parseSchema(manifestText(path, version))
+    manifest(path, version).schema
 
   /** Snapshot properties (committed stream batch ids, parent pointers).
     * Memoized like the manifest parse: ancestry walks consult props for
@@ -167,35 +172,6 @@ object Snapshots {
       })
     def get(k: (String, Long, Long)): Map[String, String] = map.get(k)
     def put(k: (String, Long, Long), v: Map[String, String]): Unit = map.put(k, v)
-  }
-
-  // one planning pass consults the same manifest several times (deletes,
-  // schema, partition specs, props) — cache the TEXT under the same
-  // (path, size, mtime) key ManifestCache uses; version files are written
-  // once (hard-link publish), so entries never go stale
-  private object ManifestTextCache {
-    private val MaxEntries = 8
-    private val map =
-      new java.util.LinkedHashMap[(String, Long, Long), String](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), String]): Boolean =
-          size() > MaxEntries
-      }
-    def get(k: (String, Long, Long)): String = synchronized { map.get(k) }
-    def put(k: (String, Long, Long), v: String): Unit = synchronized { map.put(k, v); () }
-  }
-
-  private def manifestText(path: String, version: Option[Int]): String = {
-    val v = version.getOrElse(mainVersion(path))
-    require(v > 0, s"no snapshots at $path")
-    val p = manifestPath(path, v)
-    require(Files.exists(p), s"no snapshot version $v at $path")
-    val key = (p.toString, Files.size(p), Files.getLastModifiedTime(p).toMillis)
-    val cached = ManifestTextCache.get(key)
-    if (cached != null) return cached
-    val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    ManifestTextCache.put(key, txt)
-    txt
   }
 
   // ---- named refs: branches (movable) and tags (fixed) -------------------
@@ -878,7 +854,7 @@ object Snapshots {
     */
   def setIdentifierFields(spark: SparkSession, path: String, cols: Seq[String]): Int = {
     require(cols.nonEmpty, "SET IDENTIFIER FIELDS needs at least one column")
-    val have = read(spark, path).columns.toSet
+    val have = schema(spark, path).fieldNames.toSet
     val missing = cols.filterNot(have)
     require(missing.isEmpty,
       s"SET IDENTIFIER FIELDS: no such column(s): ${missing.mkString(", ")}")
@@ -913,7 +889,7 @@ object Snapshots {
     keys match {
       case Seq(k) => mergeUpsert(spark, path, source, k, ref)
       case ks =>
-        val cols = read(spark, path).columns.toSeq
+        val cols = schema(spark, path).fieldNames.toSeq
         mergeInto(spark, path, source,
           ks.map(k => s"t.`$k` = s.`$k`").mkString(" AND "),
           Seq(MergeClause(matched = true, None, "update",
@@ -1949,7 +1925,7 @@ object Snapshots {
     // would vanish unaudited rows from main while the WAP session
     // believes its writes are staged
     rejectUnderWap(path, "a merge-on-read equality delete")
-    val tableCols = read(spark, path).columns.toSet
+    val tableCols = schema(spark, path).fieldNames.toSet
     require(rows.columns.nonEmpty && rows.columns.forall(tableCols),
       s"equality columns ${rows.columns.mkString(",")} must exist in the table")
     // record the delete under PHYSICAL column names: physicals are never
@@ -2031,7 +2007,7 @@ object Snapshots {
       df: DataFrame, eqs: Seq[EqDelete], files: Seq[FileStats]): DataFrame = {
     // one evolution-log read per apply, and only when some delete is live
     lazy val schemaEntries = TableSchema.read(path)
-    eqs.foldLeft(df) { case (d, e) =>
+    val applied = eqs.foldLeft(df) { case (d, e) =>
       val applicable = files.filter(e.appliesTo)
       // applicability FIRST: a delete all of whose target files were
       // rewritten away is a no-op, and must stay one even when its key
@@ -2073,6 +2049,10 @@ object Snapshots {
         }
       }
     }
+    // a USING join moves its key columns to the front: restore the
+    // table's column order, so pending deletes never reshape the schema
+    if (applied eq df) df
+    else applied.select(df.columns.map(c => col(s"`${c.replace("`", "``")}`")): _*)
   }
 
   /** Apply positional delete files: anti-join on the scan's
@@ -2807,7 +2787,7 @@ object Snapshots {
           .withColumn("_commit_snapshot_id", lit(v.toLong))
     }
     parts.reduceOption(_.unionAll(_)).getOrElse {
-      val schema = read(spark, path, Some(toV)).schema
+      val schema = this.schema(spark, path, Some(toV))
         .add("_change_type", org.apache.spark.sql.types.StringType)
         .add("_change_ordinal", org.apache.spark.sql.types.IntegerType)
         .add("_commit_snapshot_id", org.apache.spark.sql.types.LongType)
@@ -2870,8 +2850,8 @@ object Snapshots {
   }
 
   /** Read a snapshot (default: current) through the pruning file index,
-    * applying that snapshot's positional deletes and merge-on-read delete
-    * predicates.
+    * applying that snapshot's positional, equality and merge-on-read
+    * predicate deletes — THE DataFrame-API snapshot reader.
     */
   def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     // an unpinned read under an active WAP conf follows the audit branch.
@@ -2888,6 +2868,20 @@ object Snapshots {
           readPosDeletes(path, v)),
         readEqDeletes(path, v), m),
       readDeletes(path, v))
+  }
+
+  /** The logical schema of a snapshot (default: main head) — exactly
+    * `read(spark, path, version).schema`, derived from metadata alone
+    * ([[GeoTable.logicalSchema]]: the stored physical schema, declared
+    * geometry encodings, the evolution log's renames, promotions, nested
+    * fields and comments). Builds no relation and applies no delete.
+    * Deletes never reshape the schema and every snapshot reads under the
+    * table's current schema, so the version only has to exist.
+    */
+  def schema(spark: SparkSession, path: String,
+      version: Option[Int] = None): org.apache.spark.sql.types.StructType = {
+    manifest(path, version) // a missing snapshot fails like read does
+    GeoTable.logicalSchema(spark, path)
   }
 
   /** Changelog between two snapshots: row-level inserts/deletes with a
@@ -2961,7 +2955,7 @@ object Snapshots {
     (visible(left ++ touched, delsFrom, posFrom, eqFrom),
       visible(entered ++ touched, delsTo, posTo, eqTo)) match {
       case (None, None) =>
-        val schema = read(spark, path, Some(toVersion)).schema
+        val schema = this.schema(spark, path, Some(toVersion))
           .add("_change_type", org.apache.spark.sql.types.StringType)
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
       case (f, t) =>
@@ -3474,7 +3468,7 @@ object Snapshots {
     val entered = enteredBetween(path, fromVersion, toVersion)
     if (entered.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        read(spark, path, Some(toVersion)).schema)
+        schema(spark, path, Some(toVersion)))
     else GeoTable.applyDeletes(
       applyEqDeletes(spark, path,
         applyPosDeletes(spark, path,

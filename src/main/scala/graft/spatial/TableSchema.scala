@@ -513,46 +513,64 @@ object TableSchema {
     }
   }
 
-  /** Project a physically-named frame to the logical view (hides dropped
-    * columns, applies renames — top-level and nested). Pass-through
-    * columns (partition cols, bbox shadows added after the fact) keep
-    * their names.
+  /** The logical field an entry serves over the frame's physical field:
+    * the logical name; a nested-evolved column's [[logicalType]]; a
+    * promoted column's declared wide type — ONLY when the actual type is a
+    * strict widening source of it (a declared-encoding geometry column
+    * arrives already DECODED, wkt string files -> wkb binary frame, and
+    * must keep its decoded type); the column comment as standard field
+    * metadata on top of the physical field's own.
+    */
+  private def logicalField(e: Entry, actual: StructField): StructField = {
+    val md = e.comment.map(c =>
+        new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(actual.metadata).putString("comment", c).build())
+      .getOrElse(actual.metadata)
+    if (e.children.nonEmpty) StructField(e.logical, logicalType(e), nullable = true, md)
+    else if (actual.dataType != e.dataType && promotable(actual.dataType, e.dataType))
+      StructField(e.logical, e.dataType, actual.nullable, md)
+    else StructField(e.logical, actual.dataType, actual.nullable, md)
+  }
+
+  /** (physical source, entry, logical field) in output order: live
+    * entries present in the frame, then pass-through columns (partition
+    * cols, bbox shadows added after the fact) under their own names.
+    */
+  private def logicalFields(physical: StructType,
+      entries: Seq[Entry]): Seq[(StructField, Option[Entry], StructField)] = {
+    val mapped = entries.filterNot(_.dropped).flatMap(e =>
+      physical.fields.find(_.name == e.physical).map(f => (f, Some(e), logicalField(e, f))))
+    val known = entries.map(_.physical).toSet
+    mapped ++ physical.fields.filterNot(f => known(f.name)).map(f => (f, None, f))
+  }
+
+  /** The logical view of a physical schema — the schema [[toLogical]]
+    * produces, derived without a frame (hides dropped columns, applies
+    * renames, promotions, nested evolution and comments).
+    */
+  def logicalSchema(physical: StructType, entries: Seq[Entry]): StructType =
+    if (entries.isEmpty) physical
+    else StructType(logicalFields(physical, entries).map(_._3))
+
+  /** Project a physically-named frame to the logical view: every column
+    * lands on exactly the field [[logicalSchema]] derives (promoted
+    * columns cast up so every snapshot reads under ONE logical type;
+    * nested-evolved structs are rebuilt, then cast to fix field names and
+    * nested comments, which struct() aliases drop).
     */
   def toLogical(df: DataFrame, path: String): DataFrame = {
     val entries = read(path)
     if (entries.isEmpty) df
-    else {
-      val mapped = entries.filterNot(_.dropped)
-        .filter(e => df.columns.contains(e.physical))
-        .map { e =>
-          // promoted columns: old files surface the narrow physical type —
-          // cast up so every snapshot reads under ONE logical type. Cast
-          // ONLY when the frame's actual type is a strict widening source
-          // of the declared type: a declared-encoding geometry column
-          // arrives here already DECODED (wkt string files -> wkb binary
-          // frame), so an unconditional cast to the recorded physical
-          // type would mangle it. The column comment rides along as
-          // standard field metadata.
-          val actual = df.schema(e.physical).dataType
-          val base =
-            // the trailing cast is a name/metadata fixup (positionally
-            // identical types): struct() aliases drop field METADATA, so
-            // nested comments ride in on the cast's target type
-            if (e.children.nonEmpty)
-              projectLogical(col(e.physical), e, actual).cast(logicalType(e))
-            else if (actual != e.dataType && promotable(actual, e.dataType))
-              col(e.physical).cast(e.dataType)
-            else col(e.physical)
-          e.comment match {
-            case Some(c) => base.as(e.logical,
-              new org.apache.spark.sql.types.MetadataBuilder().putString("comment", c).build())
-            case None => base.as(e.logical)
-          }
-        }
-      val known = entries.map(_.physical).toSet
-      val passthrough = df.columns.filterNot(known).map(col(_))
-      df.select(mapped ++ passthrough: _*)
-    }
+    else df.select(logicalFields(df.schema, entries).map { case (actual, e, f) =>
+      val c = col(s"`${actual.name.replace("`", "``")}`")
+      val base = e match {
+        case Some(en) if en.children.nonEmpty =>
+          projectLogical(c, en, actual.dataType).cast(f.dataType)
+        case _ if f.dataType != actual.dataType => c.cast(f.dataType)
+        case _ => c
+      }
+      base.as(f.name, f.metadata)
+    }: _*)
   }
 
   /** Map a logically-named frame back to physical names for writing

@@ -1279,16 +1279,29 @@ class DsvPlanQualitySpec extends AnyFunSuite {
     spark.sql("CREATE TABLE pq.tp.aggsw (id BIGINT) USING graft")
     spark.sql("INSERT INTO pq.tp.aggsw SELECT id FROM range(100)")
     val sql = "SELECT count(*) AS n, min(id) AS lo, max(id) AS hi FROM pq.tp.aggsw"
+    // the same aggregate over the V1 read of the table's directory
+    import org.apache.spark.sql.functions.{count, lit, max, min}
+    def v1 = graft.spatial.GeoTable.read(spark, s"$warehouse/tp/aggsw")
+      .agg(count(lit(1)).as("n"), min("id").as("lo"), max("id").as("hi"))
     val pushed = spark.sql(sql)
     assert(!pushed.queryExecution.executedPlan.toString.contains("BatchScan"),
       "default: answered from the manifest")
-    spark.conf.set("spark.sql.graft.aggregate-push-down.enabled", "false")
-    try {
-      val scanned = spark.sql(sql)
-      assert(scanned.queryExecution.executedPlan.toString.contains("BatchScan"),
-        "kill-switch must force a real scan")
-      assert(scanned.collect().toSeq == pushed.collect().toSeq)
-    } finally spark.conf.unset("spark.sql.graft.aggregate-push-down.enabled")
+    assert(!v1.queryExecution.executedPlan.toString.contains("FileScan"),
+      "default: the V1 rule answers from the manifest too")
+    val expected = pushed.collect().toSeq
+    // both paths parse the switch the same way: `1` is on; `false` and a
+    // malformed value force a real scan, never an exception
+    Seq("1" -> true, "false" -> false, "maybe" -> false).foreach { case (value, on) =>
+      withConf("spark.sql.graft.aggregate-push-down.enabled" -> value) {
+        val dsv2 = spark.sql(sql)
+        assert(dsv2.queryExecution.executedPlan.toString.contains("BatchScan") != on,
+          s"DSv2 with the switch at '$value'")
+        assert(dsv2.collect().toSeq == expected)
+        val v1Plan = v1.queryExecution.executedPlan.toString
+        assert(v1Plan.contains("FileScan") != on, s"V1 with the switch at '$value':\n$v1Plan")
+        assert(v1.collect().toSeq == expected)
+      }
+    }
   }
 
   test("vectorization-enabled=false forces the row path (option and property forms)") {

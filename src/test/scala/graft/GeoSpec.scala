@@ -105,7 +105,7 @@ class GeoSpec extends AnyFunSuite {
   }
 
   test("manifest records one bbox per file (writer metrics)") {
-    val stats = GeoTable.readManifest(tableDir)
+    val stats = graft.spatial.Snapshots.readManifest(tableDir)
     assert(stats.length == 4)
     stats.foreach { f =>
       assert(f.rows == 20)

@@ -142,7 +142,7 @@ class IncrementalReadSpec extends AnyFunSuite {
     assert(err.getMessage != null)
   }
 
-  test("incremental options reject time-travel combos and the V1 fallback path") {
+  test("incremental options reject time-travel combos") {
     val dir = newTable()
     // combining with table-level time travel would mix histories: files
     // planned along main's ancestry, schema/deletes from the traveled
@@ -152,15 +152,6 @@ class IncrementalReadSpec extends AnyFunSuite {
         .option("start-version", 1).option("version", 2).load(dir).collect()
     }
     assert(e.getMessage.contains("cannot be combined"))
-    // the V1 fallback has no incremental planning: loud failure, never a
-    // silent full-table superset
-    spark.conf.set("spark.sql.sources.useV1SourceList", "graft")
-    try {
-      val e2 = intercept[Exception] {
-        spark.read.format("graft").option("start-version", 1).load(dir).collect()
-      }
-      assert(e2.getMessage.contains("V1 fallback"))
-    } finally spark.conf.unset("spark.sql.sources.useV1SourceList")
   }
 
   test("repeat incremental scans replay memoized deltas: zero re-parses") {

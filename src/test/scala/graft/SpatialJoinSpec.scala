@@ -209,7 +209,7 @@ class SpatialJoinSpec extends AnyFunSuite {
       assert(hits >= 1, s"pruned spatial query on $enc table")
       // bbox manifest unaffected by the storage encoding; geometry column
       // itself excluded from value stats (no WKT blobs in the manifest)
-      val stats = GeoTable.readManifest(dir)
+      val stats = graft.spatial.Snapshots.readManifest(dir)
       assert(stats.size == 2 && stats.forall(_.mins.contains("geom_bbox.xmin")))
       assert(stats.forall(f => !f.mins.contains("geom")))
       // vectorized scan stays on: geometry is a plain physical column (the
