@@ -175,8 +175,7 @@ object GeoQueries {
   private def ensureGridTableLocked(s: SparkSession, cat: String,
       wh: String, name: String, srcRoots: Seq[String], tdir: java.io.File)
       (mk: Seq[String] => DataFrame): Unit = {
-    val manifest = new java.io.File(tdir, graft.spatial.GeoTable.ManifestName)
-    if (tdir.exists() && !manifest.exists()) {
+    if (tdir.exists() && !graft.spatial.Snapshots.isTable(tdir.getPath)) {
       graft.spatial.Snapshots.walkDir(tdir.toPath)(_.toSeq).reverse
         .foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
@@ -188,7 +187,7 @@ object GeoQueries {
         .tableProperty(GridSrcProp, encodeCapture(capture))
         .partitionedBy(col("cell_x"), col("cell_y")).create()
     }
-    if (!manifest.exists()) createFresh()
+    if (!graft.spatial.Snapshots.isTable(tdir.getPath)) createFresh()
     else {
       val recorded = decodeCapture(
         graft.spatial.Snapshots.readProps(tdir.toString)

@@ -580,8 +580,7 @@ object Similarity {
     * about, so it rebuilds rather than silently answering from them.
     */
   private def isGraftCorpus(corpusPath: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(corpusPath,
-      graft.spatial.GeoTable.ManifestName))
+    graft.spatial.Snapshots.isTable(corpusPath)
 
   /** ONE capture of the corpus's data-file state: (relative name →
     * "size:stamp" map, pinned source version — 0 for plain-parquet

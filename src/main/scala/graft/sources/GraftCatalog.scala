@@ -85,8 +85,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
   private def tablePath(ident: Identifier): java.nio.file.Path =
     backend.tableLocation(ident)
 
-  private def isTable(p: java.nio.file.Path): Boolean =
-    java.nio.file.Files.exists(p.resolve(GeoTable.ManifestName))
+  private def isTable(p: java.nio.file.Path): Boolean = Snapshots.isTable(p.toString)
 
   /** Authoritative resolution of an EXISTING table: the backend must know
     * the identifier (under `backend=registry` an unregistered name is
@@ -743,12 +742,11 @@ class StagedGraftTable(ident: Identifier, finalPath: String, tmpPath: String,
   override def commitStagedChanges(): Unit = {
     val spark = SparkSession.active
     val entries = Snapshots.readManifest(tmpPath)
-    val schema = GeoTable.readSchema(tmpPath).getOrElse(declaredSchema)
+    val schema = Snapshots.readSchema(tmpPath).getOrElse(declaredSchema)
     // re-attach the WAP props withheld from the staging manifest (mkStaged)
     val finalProps = Snapshots.readProps(tmpPath) ++
       props.view.filterKeys(_ == "write.wap.enabled").toMap
-    val exists = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(finalPath, GeoTable.ManifestName))
+    val exists = Snapshots.isTable(finalPath)
     if (exists && !replace) throw new TableAlreadyExistsException(ident)
     if (!exists && replace && !orCreate) throw new NoSuchTableException(ident)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(finalPath))

@@ -54,10 +54,10 @@ class GraftTable(val path: String, val snapshotVersion: Option[Int],
     * IS_DELETED / PARTITION).
     */
   override def metadataColumns(): Array[MetadataColumn] = {
+    val head = Snapshots.headManifest(path)
     val partType = GraftScan.partitionKeySchema(
-      graft.spatial.GeoTable.readPartitionSpecs(path),
-      graft.spatial.GeoTable.readSchema(path).map(_.fields.toSeq)
-        .getOrElse(schema.fields.toSeq))
+      head.map(_.specs).getOrElse(Nil),
+      head.flatMap(_.schema).map(_.fields.toSeq).getOrElse(schema.fields.toSeq))
     GraftMetadataColumns.forSchema(schema, partType)
   }
 
@@ -457,7 +457,7 @@ class GraftScanBuilder(spark: SparkSession, path: String, version: Option[Int],
   private lazy val explicitFiles: Option[Seq[graft.spatial.FileStats]] =
     opt("__files").map { s =>
       val names = s.split(',').filter(_.nonEmpty).toSet
-      val found = Snapshots.readManifest(path, effVersion).filter(f => names(f.path))
+      val found = table.files.filter(f => names(f.path))
       require(found.size == names.size,
         s"__files names ${names.size - found.size} file(s) not in the snapshot manifest")
       found
@@ -467,8 +467,12 @@ class GraftScanBuilder(spark: SparkSession, path: String, version: Option[Int],
     * incremental entered set, or the explicit subset.
     */
   private def manifestForPlanning: Seq[graft.spatial.FileStats] =
-    explicitFiles.orElse(incrementalFiles)
-      .getOrElse(Snapshots.readManifest(path, effVersion))
+    explicitFiles.orElse(incrementalFiles).getOrElse(table.files)
+
+  /** Table metadata and the scanned snapshot, resolved once and shared
+    * with the scan this builder builds.
+    */
+  private lazy val table = new GraftScan.TableState(spark, path, effVersion, logicalSchema)
 
   private var pushed: Array[sources.Filter] = Array.empty
   private var claimed: Set[sources.Filter] = Set.empty
@@ -482,8 +486,7 @@ class GraftScanBuilder(spark: SparkSession, path: String, version: Option[Int],
     */
   private lazy val exactPartCols: Set[String] = try {
     import org.apache.spark.sql.types._
-    val ident = GeoTable.readPartitionSpecs(path)
-      .collect { case graft.spatial.Transforms.Identity(c) => c }
+    val ident = table.specs.collect { case graft.spatial.Transforms.Identity(c) => c }
     if (ident.isEmpty) Set.empty
     else {
       val typed = logicalSchema.fields.filter(f => ident.contains(f.name)).collect {
@@ -579,7 +582,7 @@ class GraftScanBuilder(spark: SparkSession, path: String, version: Option[Int],
     // which declines grouped aggregations)
     import org.apache.spark.sql.types.{DataType => SDataType}
     val groupCols: Option[Seq[(String, SDataType)]] = {
-      val identCols = GeoTable.readPartitionSpecs(path)
+      val identCols = table.specs
         .collect { case graft.spatial.Transforms.Identity(c) => c }.toSet
       val resolved = agg.groupByExpressions.toSeq.map {
         case n: NamedReference if n.fieldNames.length == 1 &&
@@ -597,10 +600,8 @@ class GraftScanBuilder(spark: SparkSession, path: String, version: Option[Int],
       if (resolved.exists(_.isEmpty)) None else Some(resolved.map(_.get))
     }
     if (groupCols.isEmpty) return None
-    if (Snapshots.currentVersion(path) != 0 &&
-        (Snapshots.readDeletes(path, effVersion).nonEmpty ||
-         Snapshots.readEqDeletes(path, effVersion).nonEmpty ||
-         Snapshots.readPosDeletes(path, effVersion).nonEmpty)) return None
+    if (table.morConds.nonEmpty || table.eqDeletes.nonEmpty || table.posDeletes.nonEmpty)
+      return None
     val stats = manifestForPlanning.filter(f =>
       pushed.forall(GraftScan.exactlyMatches(f.dirVals, _)))
     val schemaEntries = TableSchema.read(path)
@@ -682,8 +683,7 @@ class GraftScanBuilder(spark: SparkSession, path: String, version: Option[Int],
 
   override def build(): Scan = aggResult match {
     case Some((aggSchema, rows)) => GraftLocalAggScan(aggSchema, rows)
-    case None => new GraftScan(spark, path, effVersion,
-      new GraftScan.TableState(spark, path, effVersion, logicalSchema), required, pushed,
+    case None => new GraftScan(spark, path, effVersion, table, required, pushed,
       exactFilters = claimed.toArray, limit = limit,
       streamOptions = {
         import scala.jdk.CollectionConverters._
@@ -744,8 +744,8 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
     with SupportsReportPartitioning {
 
   import table.{encodings, eqDeletes, fullSchemaFields, logicalFull, logicalToPhysical,
-    morConds, partCols, physicalDataSchema, posCov, posCovBySuffix, posRefs, resolveEqCol,
-    schemaEntries}
+    morConds, partCols, physicalDataSchema, posCov, posCovBySuffix, posRefs, pruningSpecs,
+    resolveEqCol, schemaEntries}
 
   /** `spark.readStream.table("cat.db.t")` — the reference's
     * `SparkTable.java:105-109` advertises MICRO_BATCH_READ on catalog
@@ -917,7 +917,7 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
   private var runtimeFilters: Array[sources.Filter] = Array.empty
 
   override def filterAttributes(): Array[NamedReference] = {
-    val partSrcs = GeoTable.readPartitionSpecs(path).map(_.source)
+    val partSrcs = table.specs.map(_.source)
     // beyond partition sources: any atomic data column with per-file
     // min/max in the manifest can prune files at runtime too — a
     // dim-filtered join on a non-partition key over clustered data drops
@@ -934,8 +934,7 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
       }
     }
     val statted = try {
-      val keys = Snapshots.readManifest(path, version)
-        .flatMap(f => f.mins.keysIterator ++ f.maxs.keysIterator).toSet
+      val keys = table.files.flatMap(f => f.mins.keysIterator ++ f.maxs.keysIterator).toSet
       fullSchemaFields.collect {
         case f if statPrunable(f.dataType) && keys.contains(f.name) =>
           physicalToLogical.getOrElse(f.name, f.name)
@@ -973,8 +972,7 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
   // any file missing a derived dir voids the report (same guard as the V1
   // path's BucketSpec, `spatial/GeoTable.scala`).
 
-  private[sources] lazy val spjSpecs: Seq[graft.spatial.Transforms.Transform] =
-    GeoTable.readPartitionSpecs(path)
+  private[sources] def spjSpecs: Seq[graft.spatial.Transforms.Transform] = table.specs
 
   /** Names of HIDDEN derived partition columns (bucket/truncate/date
     * transforms): filters on them prune via directory segments only — the
@@ -1071,7 +1069,7 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
     * even when the column is pruned from the output.
     */
   private val planningPartSchema: StructType = StructType(
-    GeoTable.readPartitionSpecs(path).collect { case graft.spatial.Transforms.Identity(c) => c }
+    table.specs.collect { case graft.spatial.Transforms.Identity(c) => c }
       .flatMap(c => fullSchemaFields.find(_.name == c))
       // only castable types: an uncastable (timestamp/decimal) dir value
       // cannot drive pruning decisions — see PartitionPaths.castable
@@ -1103,7 +1101,7 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
       new TotalFileSizeMetric, new ResultDeleteFilesMetric)
 
   override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-    val candidates = incrementalFiles.getOrElse(Snapshots.readManifest(path, version))
+    val candidates = incrementalFiles.getOrElse(table.files)
     val result = plannedFiles
     Array(GraftScan.DriverMetric("resultDataFiles", result.size),
       GraftScan.DriverMetric("skippedDataFiles", candidates.size - result.size),
@@ -1112,7 +1110,7 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
   }
 
   private def computePlannedFiles: Seq[graft.spatial.FileStats] = {
-    val manifest0 = incrementalFiles.getOrElse(Snapshots.readManifest(path, version))
+    val manifest0 = incrementalFiles.getOrElse(table.files)
     // claimed filters are not re-evaluated above the scan: enforce them
     // exactly here (drops null-dir files inclusive pruning would keep)
     val manifest1 =
@@ -1130,7 +1128,7 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
       if (dirFs.isEmpty) manifest1
       else manifest1.filter(f => dirFs.forall(GraftScan.dirMightMatch(f.dirVals, _)))
     val index = new GraftFileIndex(spark, new Path(path), manifest,
-      readPhysicalData, planningPartSchema, GeoTable.readPruningSpecs(path))
+      readPhysicalData, planningPartSchema, pruningSpecs)
     val keep = index.listFiles(Nil, catalystFilters)
       .flatMap(_.files.map(_.getPath.toUri.getPath)).toSet
     val kept = manifest.filter(f =>
@@ -1193,7 +1191,7 @@ class GraftScan(spark: SparkSession, path: String, version: Option[Int],
   override def planInputPartitions(): Array[InputPartition] = {
     val files = plannedFiles
     val index = new GraftFileIndex(spark, new Path(path), files,
-      readPhysicalData, readPartSchema, GeoTable.readPruningSpecs(path))
+      readPhysicalData, readPartSchema, pruningSpecs)
     val byAbs = files.map(f => new Path(new Path(path), f.path).toUri.getPath -> f).toMap
     // one key per task only when the partitioning report is live — the
     // same condition outputPartitioning() checks
@@ -1421,29 +1419,37 @@ object GraftScan {
   import org.apache.spark.sql.connector.expressions.{Expression => VExpr, Literal => VLiteral}
 
   /** What a scan resolves once per table load from metadata: the logical
-    * schema (passed down from the table), the physical layout, the
-    * evolution log, declared encodings, and the delete state of the
-    * scanned snapshot. Delete-file METADATA only, never rows.
+    * schema (passed down from the table), main head's table-level layout
+    * (partition spec, pruning specs, stored schema), the evolution log,
+    * declared encodings, and the scanned snapshot's files and delete
+    * state. Delete-file METADATA only, never rows.
     */
   private[sources] final class TableState(spark: SparkSession, path: String,
       version: Option[Int], val logicalFull: StructType) {
-    val partCols: Seq[String] = GeoTable.readPartitionCols(path)
+    private val head: Option[graft.spatial.GeoTable.Manifest] = Snapshots.headManifest(path)
+    /** The scanned snapshot: `version`, else main's head. */
+    private val snapshot: Option[graft.spatial.GeoTable.Manifest] =
+      version.map(v => Snapshots.manifest(path, Some(v))).orElse(head)
+    val files: Seq[graft.spatial.FileStats] = snapshot.map(_.files).getOrElse(Nil)
+    val specs: Seq[graft.spatial.Transforms.Transform] = head.map(_.specs).getOrElse(Nil)
+    val pruningSpecs: Seq[graft.spatial.Transforms.Transform] =
+      head.map(_.pruningSpecs).getOrElse(Nil)
+    val partCols: Seq[String] = head.map(_.partitionCols).getOrElse(Nil)
     val schemaEntries: Seq[TableSchema.Entry] = TableSchema.read(path)
     val logicalToPhysical: Map[String, String] =
       schemaEntries.filterNot(_.dropped).map(e => e.logical -> e.physical).toMap
     val encodings: Map[String, String] = GeometryFields.get(path)
     // full physical file schema (for parquet footer matching), nullable
     // like the V1 relation's
-    val physicalDataSchema: StructType = GeoTable.relationSchemas(spark, path)._1
+    val physicalDataSchema: StructType = GeoTable.relationSchemas(spark, path, head)._1
     val fullSchemaFields: Seq[org.apache.spark.sql.types.StructField] =
-      GeoTable.readSchema(path).map(_.fields.toSeq).getOrElse(physicalDataSchema.fields.toSeq)
-    private val hasSnapshot = Snapshots.currentVersion(path) != 0
+      head.flatMap(_.schema).map(_.fields.toSeq).getOrElse(physicalDataSchema.fields.toSeq)
     // MoR predicate deletes must be evaluable even when their columns are
     // pruned away — scans extend the read with those logical columns and
     // drop them after filtering
-    val morConds: Seq[String] = if (hasSnapshot) Snapshots.readDeletes(path, version) else Nil
-    val eqDeletes: Seq[graft.spatial.EqDelete] =
-      if (hasSnapshot) Snapshots.readEqDeletes(path, version) else Nil
+    val morConds: Seq[String] = snapshot.map(_.deletes).getOrElse(Nil)
+    val eqDeletes: Seq[graft.spatial.EqDelete] = snapshot.map(_.eqDeletes).getOrElse(Nil)
+    val posDeletes: Seq[String] = snapshot.map(_.posDeletes).getOrElse(Nil)
     /** An equality-delete key column under the CURRENT logical schema —
       * ONE resolver seat with the V1 read path
       * ([[graft.spatial.TableSchema.resolveDeleteCol]]: physical match
@@ -1462,9 +1468,7 @@ object GraftScan {
       (morConds.flatMap(refs) ++ eqDeletes.flatMap(_.cols).flatMap(resolveEqCol))
         .filter(logicalFull.fieldNames.contains).distinct
     }
-    lazy val posRefs: Seq[DeleteFileRef] =
-      if (hasSnapshot) DeleteFiles.refs(spark, path, Snapshots.readPosDeletes(path, version))
-      else Nil
+    lazy val posRefs: Seq[DeleteFileRef] = DeleteFiles.refs(spark, path, posDeletes)
     lazy val posCov: Map[String, Seq[DeleteFileRef]] =
       DeleteFiles.posCoverage(spark, path, posRefs)
     // shared suffix-fallback construction — see [[DeleteFiles.suffixIndex]]

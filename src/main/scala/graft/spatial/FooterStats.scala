@@ -225,7 +225,7 @@ object MetricsModes {
       case _ => false
     }
     val declared = GeometryFields.get(path).keySet
-    val fromSchema = GeoTable.readSchema(path).map { st =>
+    val fromSchema = Snapshots.readSchema(path).map { st =>
       st.fields.collect {
         case f if f.name.endsWith("_bbox") && isBboxStruct(f.dataType) &&
             st.fields.exists(s => s.name == f.name.stripSuffix("_bbox") &&

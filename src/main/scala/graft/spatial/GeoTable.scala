@@ -1,8 +1,5 @@
 package graft.spatial
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
@@ -26,9 +23,10 @@ import graft.functions.GeoSql
   *    the hilbert index), the write-clustering the fork gets from a
   *    `hilbert[...]` sort order (`SparkWriteUtil.java:68-120`,
   *    `SortOrderToSpark.java:87-104`);
-  *  - a JSON manifest `_graft_manifest.json` records per-file min/max for
-  *    every primitive leaf (struct leaves flattened), the analogue of
-  *    Iceberg's per-file `lower_bounds`/`upper_bounds`.
+  *  - each snapshot's JSON manifest (`_graft_manifest_v{N}.json`, see
+  *    [[Snapshots]]) records per-file min/max for every primitive leaf
+  *    (struct leaves flattened), the analogue of Iceberg's per-file
+  *    `lower_bounds`/`upper_bounds`.
   *
   * Scale posture: the clustering is a range shuffle on a long (no skew —
   * Hilbert indexes are near-uniform for near-uniform data; salting hook left
@@ -38,7 +36,6 @@ import graft.functions.GeoSql
   */
 object GeoTable {
 
-  val ManifestName = "_graft_manifest.json"
   val DefaultResolution = 12
   val WorldBounds: (Double, Double, Double, Double) = (-180d, -90d, 180d, 90d)
 
@@ -236,13 +233,18 @@ object GeoTable {
     * need pre-delete rows (`readWithPositions`, `changes`, Similarity's
     * delete capture). Declared geometry encodings decode back to the WKB
     * runtime repr (the bbox shadow column drives pruning either way) and
-    * the frame carries exactly [[logicalSchema]].
+    * the frame carries exactly [[logicalSchema]]. `head` (the main head's
+    * manifest) supplies the table-level layout for every version read.
     */
-  def readWithStats(spark: SparkSession, path: String, stats: Seq[FileStats]): DataFrame = {
+  def readWithStats(spark: SparkSession, path: String, stats: Seq[FileStats]): DataFrame =
+    readWithStats(spark, path, stats, Snapshots.headManifest(path))
+
+  def readWithStats(spark: SparkSession, path: String, stats: Seq[FileStats],
+      head: Option[Manifest]): DataFrame = {
     GeoSql.install(spark)
     Geo.installRule(spark)
     val raw = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .baseRelationToDataFrame(buildRelation(spark, path, stats))
+      .baseRelationToDataFrame(buildRelation(spark, path, stats, head))
     val decoded = GeometryFields.get(path).foldLeft(raw) { case (df, (c, e)) =>
       df.withColumn(c, GeometryEncoding.decode(col(c), e))
     }
@@ -255,8 +257,9 @@ object GeoTable {
     * rule), each declared geometry column decoded to a nullable BINARY
     * without metadata, then [[TableSchema.logicalSchema]].
     */
-  private[spatial] def logicalSchema(spark: SparkSession, path: String): StructType = {
-    val (data, part) = relationSchemas(spark, path)
+  private[spatial] def logicalSchema(spark: SparkSession, path: String,
+      head: Option[Manifest]): StructType = {
+    val (data, part) = relationSchemas(spark, path, head)
     val raw = org.apache.spark.sql.execution.datasources.PartitioningUtils
       .mergeDataAndPartitionSchema(data, part, spark.sessionState.conf.caseSensitiveAnalysis)._1
     val encoded = GeometryFields.get(path)
@@ -270,12 +273,13 @@ object GeoTable {
     * move to the partition schema; their values are served from the file
     * paths by [[GraftFileIndex]].
     */
-  private[graft] def relationSchemas(spark: SparkSession, path: String): (StructType, StructType) = {
+  private[graft] def relationSchemas(spark: SparkSession, path: String,
+      head: Option[Manifest]): (StructType, StructType) = {
     // authoritative schema from the manifest — relation construction makes
     // ZERO object-store round-trips (no listing, no footer sampling); the
     // inference fallback exists only for legacy manifests without a schema
-    val full = ensureSchema(spark, path)
-    val partCols = readPartitionCols(path)
+    val full = ensureSchema(spark, path, head)
+    val partCols = head.map(_.partitionCols).getOrElse(Nil)
     val partitionSchema = StructType(partCols.flatMap(c => full.fields.find(_.name == c)))
     // evolved tables read under the authoritative stored physical schema
     // (a sampled file may predate an added column)
@@ -288,17 +292,18 @@ object GeoTable {
   }
 
   /** The pruning-FileIndex-backed relation under [[readWithStats]]. */
-  def buildRelation(spark: SparkSession, path: String, stats: Seq[FileStats]): HadoopFsRelation = {
-    val (dataSchema, partitionSchema) = relationSchemas(spark, path)
+  def buildRelation(spark: SparkSession, path: String, stats: Seq[FileStats],
+      head: Option[Manifest]): HadoopFsRelation = {
+    val (dataSchema, partitionSchema) = relationSchemas(spark, path, head)
     val index = new GraftFileIndex(spark, new Path(path), stats, dataSchema, partitionSchema,
-      readPruningSpecs(path))
+      head.map(_.pruningSpecs).getOrElse(Nil))
     // a bucket transform doubles as a Spark bucket spec: file names carry
     // `_0000K` ids (stamped on write) and the bucket hash is Spark's own,
     // so the scan reports HashPartitioning and bucketed joins skip the
     // exchange entirely. After spec evolution the claim only holds if
     // every live file was laid out under the bucket spec — files from an
     // older generation (no bucket dir in their path) void it.
-    val bucketSpec = readPartitionSpecs(path).collectFirst {
+    val bucketSpec = head.toSeq.flatMap(_.specs).collectFirst {
       case b: Transforms.Bucket if dataSchema.fieldNames.contains(b.source) &&
           stats.forall(_.path.contains(s"${b.derivedName}=")) =>
         org.apache.spark.sql.catalyst.catalog.BucketSpec(b.n, Seq(b.source), Nil)
@@ -496,81 +501,40 @@ object GeoTable {
 
   /** One manifest document, parsed once: file entries, the three delete
     * kinds, partition layout and the persisted schema. [[Snapshots]]
-    * memoizes it per published version; the mirror's table-level fields
-    * are memoized by [[mirrorMeta]].
+    * memoizes it per published version; the main head's copy is the
+    * table's metadata (partition spec, spec history, schema).
     */
   private[graft] final case class Manifest(files: Seq[FileStats], deletes: Seq[String],
       posDeletes: Seq[String], eqDeletes: Seq[EqDelete], partitions: Seq[String],
-      partitionHistory: Seq[String], schema: Option[StructType])
-
-  /** Parsed table-level metadata of the MIRROR manifest, memoized by
-    * (path, size, mtime): one DSv2 planning pass consults the partition
-    * specs / history / schema ~8-10 times (directly and through
-    * readPruningSpecs, the SPJ key rows, filter attribute sets), and
-    * each un-memoized call re-read AND re-JSON-parsed the whole manifest
-    * — a multi-MB document for a 100k-file table — to extract a few
-    * small fields. Version files are write-once (atomic replace), so the
-    * stat key is the same identity contract Snapshots' caches use.
-    */
-  private final case class MirrorMeta(parts: Seq[String], history: Seq[String],
-      schema: Option[StructType]) {
-    // Transform parse is deterministic per spec string — share it too
-    lazy val specs: Seq[Transforms.Transform] = parts.map(Transforms.parse)
-    lazy val historySpecs: Seq[Transforms.Transform] = history.map(Transforms.parse)
-  }
-
-  private object MirrorMetaCache {
-    private val MaxEntries = 512
-    private val map = java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), MirrorMeta](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), MirrorMeta]): Boolean =
-          size() > MaxEntries
-      })
-    def get(k: (String, Long, Long)): MirrorMeta = map.get(k)
-    def put(k: (String, Long, Long), v: MirrorMeta): Unit = map.put(k, v)
-  }
-
-  private def mirrorMeta(path: String): Option[MirrorMeta] = {
-    val p = Paths.get(path, ManifestName)
-    if (!Files.exists(p)) None
-    else {
-      val key = (p.toString, Files.size(p), Files.getLastModifiedTime(p).toMillis)
-      val cached = MirrorMetaCache.get(key)
-      if (cached != null) Some(cached)
-      else {
-        val m = parseManifest(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-        val meta = MirrorMeta(m.partitions, m.partitionHistory, m.schema)
-        MirrorMetaCache.put(key, meta)
-        Some(meta)
-      }
+      partitionHistory: Seq[String], schema: Option[StructType]) {
+    // Transform parse is deterministic per spec string — memoized with
+    // the parse, so planning's repeated spec lookups cost nothing
+    lazy val specs: Seq[Transforms.Transform] = partitions.map(Transforms.parse)
+    lazy val partitionCols: Seq[String] = specs.map(_.derivedName)
+    /** Transforms for PLANNING-time pruning: the current spec plus every
+      * retired generation. Projection pruning is per-file self-describing —
+      * a file is pruned only by transforms whose derived directory it
+      * actually carries ([[GraftFileIndex]] keeps files with no matching
+      * dir) — so the union is safe across spec generations, the same
+      * old-files-keep-their-spec semantics as Iceberg spec evolution.
+      */
+    lazy val pruningSpecs: Seq[Transforms.Transform] = {
+      val names = partitionCols.toSet
+      specs ++ partitionHistory.map(Transforms.parse).filterNot(t => names(t.derivedName))
     }
   }
 
   /** Partition transform specs of the table (empty = unpartitioned). */
   def readPartitionSpecs(path: String): Seq[Transforms.Transform] =
-    mirrorMeta(path).map(_.specs).getOrElse(Nil)
+    Snapshots.headManifest(path).map(_.specs).getOrElse(Nil)
 
   /** Partition DIRECTORY column names (derived names for transforms). */
   def readPartitionCols(path: String): Seq[String] =
-    readPartitionSpecs(path).map(_.derivedName)
+    Snapshots.headManifest(path).map(_.partitionCols).getOrElse(Nil)
 
   /** Retired partition spec strings (partition-spec evolution history). */
   def readPartitionHistory(path: String): Seq[String] =
-    mirrorMeta(path).map(_.history).getOrElse(Nil)
-
-  /** Transforms for PLANNING-time pruning: the current spec plus every
-    * retired generation. Projection pruning is per-file self-describing —
-    * a file is pruned only by transforms whose derived directory it
-    * actually carries ([[GraftFileIndex]] keeps files with no matching
-    * dir) — so the union is safe across spec generations, the same
-    * old-files-keep-their-spec semantics as Iceberg spec evolution.
-    */
-  def readPruningSpecs(path: String): Seq[Transforms.Transform] =
-    mirrorMeta(path).map { m =>
-      val names = m.specs.map(_.derivedName).toSet
-      m.specs ++ m.historySpecs.filterNot(t => names(t.derivedName))
-    }.getOrElse(Nil)
+    Snapshots.headManifest(path).map(_.partitionHistory).getOrElse(Nil)
 
   /** Free-form table/snapshot properties (e.g. committed stream batch). */
   private[spatial] def parseProps(txt: String): Map[String, String] = {
@@ -582,18 +546,18 @@ object GeoTable {
     }
   }
 
-  /** Schema of the CURRENT manifest (main head). */
-  def readSchema(path: String): Option[StructType] =
-    mirrorMeta(path).flatMap(_.schema)
-
   /** Authoritative full schema with legacy backfill: manifests written
     * before schemas were persisted get ONE inference, whose result is
     * written back as a metadata-only snapshot — so the fallback fires at
     * most once in a table's lifetime and every later read is
     * zero-round-trip, the same contract new tables get at write time.
+    * `head` is the main head's manifest, passed by callers that hold it.
     */
   def ensureSchema(spark: SparkSession, path: String): StructType =
-    readSchema(path).getOrElse {
+    ensureSchema(spark, path, Snapshots.headManifest(path))
+
+  def ensureSchema(spark: SparkSession, path: String, head: Option[Manifest]): StructType =
+    head.flatMap(_.schema).getOrElse {
       val inferred = spark.read.format("parquet").load(path).schema
       try Snapshots.backfillSchema(path, inferred)
       catch { case _: Exception => () } // read-only filesystems keep inferring

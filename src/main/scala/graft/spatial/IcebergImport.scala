@@ -116,7 +116,6 @@ object IcebergImport {
       meta.chain.map(s => s.id ->
         readManifests(s.manifestList, p => avroMemo.getOrElseUpdate(p, readAvro(p))))
     val dataEntries = perSnap.flatMap(_._2._1)
-    val posDels = perSnap.flatMap(_._2._2).distinct
     val eqDels = perSnap.flatMap(_._2._3).distinct
     dataEntries.foreach { e =>
       require(e.format.equalsIgnoreCase("PARQUET"),

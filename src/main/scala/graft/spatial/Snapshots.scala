@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   * `VERSION AS OF` in /root/reference's surface, SURVEY.md §2.7).
   *
   * Every snapshot is a JSON manifest `_graft_manifest_v{N}.json` listing
-  * its data files + stats; `_graft_manifest.json` mirrors the current one.
+  * its data files + stats; the refs pointer names each branch's head, and
+  * main's head manifest is the table's metadata (partition spec, spec
+  * history, schema).
   * Data files are immutable — append writes new files, overwrite publishes
   * a manifest that simply stops referencing old ones, and DELETE rewrites
   * only the files whose stats say they *might* contain matching rows (the
@@ -101,7 +103,7 @@ object Snapshots {
   }
 
   /** The parsed manifest of a snapshot (default: main head). */
-  private def manifest(path: String, version: Option[Int]): GeoTable.Manifest = {
+  private[graft] def manifest(path: String, version: Option[Int]): GeoTable.Manifest = {
     val v = version.getOrElse(mainVersion(path))
     require(v > 0, s"no snapshots at $path")
     val p = manifestPath(path, v)
@@ -131,9 +133,36 @@ object Snapshots {
   def readEqDeletes(path: String, version: Option[Int] = None): Seq[EqDelete] =
     manifest(path, version).eqDeletes
 
-  /** Persisted schema of a snapshot (None for legacy manifests). */
+  /** Persisted schema of a snapshot (None for legacy manifests). The
+    * default is main's head, None when there is no snapshot yet.
+    */
   def readSchema(path: String, version: Option[Int] = None): Option[org.apache.spark.sql.types.StructType] =
-    manifest(path, version).schema
+    version.map(v => manifest(path, Some(v))).orElse(headManifest(path)).flatMap(_.schema)
+
+  /** Main head's parsed manifest under refs state `rs` (None: no snapshot
+    * yet). It carries the table-level metadata: the partition spec, the
+    * spec history and the schema. Branch commits carry main's spec, and
+    * time-travel reads plan with it.
+    */
+  private[graft] def headManifest(path: String): Option[GeoTable.Manifest] =
+    headManifest(path, refsState(path))
+
+  private[graft] def headManifest(path: String, rs: RefsState): Option[GeoTable.Manifest] = {
+    val v = rs.mainHead(path)
+    if (v > 0) Some(manifest(path, Some(v))) else None
+  }
+
+  /** Is `path` a graft table? Yes when its refs state names a `main`
+    * head. A refs-less directory is a table only if it holds the legacy
+    * `_graft_manifest.json` marker, which tables written before the refs
+    * pointer existed carry (its existence is checked, never its content):
+    * a writer that crashed between linking its first version file and its
+    * first refs CAS leaves a lone `_graft_manifest_v1.json`, and that
+    * directory is not a table.
+    */
+  def isTable(path: String): Boolean =
+    refsState(path).branches.contains("main") ||
+      Files.exists(Paths.get(path, "_graft_manifest.json"))
 
   /** Snapshot properties (committed stream batch ids, parent pointers).
     * Memoized like the manifest parse: ancestry walks consult props for
@@ -219,9 +248,10 @@ object Snapshots {
     * it), then to empty for refs-less tables.
     */
   private[graft] def refsState(path: String): RefsState = {
+    refsReads.incrementAndGet()
     val dir = Paths.get(path)
     var max = 0
-    if (Files.exists(dir)) {
+    if (Files.isDirectory(dir)) {
       max = listDir(dir)(_.foldLeft(0) { (m, p) =>
         val n = p.getFileName.toString
         if (n.startsWith("_graft_refs_v") && n.endsWith(".json"))
@@ -239,6 +269,11 @@ object Snapshots {
       RefsState(0, bs, ts)
     } else RefsState(0, Map.empty, Map.empty)
   }
+
+  /** Refs-state reads (each one lists the table directory) — the metadata
+    * cost one planning pass pays to find main's head.
+    */
+  private[graft] val refsReads = new java.util.concurrent.atomic.AtomicLong
 
   /** (branches, tags) → version. */
   def readRefs(path: String): (Map[String, Int], Map[String, Int]) = {
@@ -474,14 +509,15 @@ object Snapshots {
       minVersion: Int = 0,
       operation: String = null): Int = {
     val refHead = rs.branches.getOrElse(ref, if (ref == "main") rs.mainHead(path) else 0)
-    // partitioning is table-level: carry the column list forward; props
-    // and schema carry forward (from the ref's OWN head) unless replaced
-    // carry SPEC strings, not derived names: `bucket(4,id)` must survive
-    // the first publish or projection pruning degrades to identity
-    val parts = Option(partsOverride)
-      .getOrElse(GeoTable.readPartitionSpecs(path).map(_.spec))
+    // partitioning is table-level: carry main's spec and history forward
+    // from the head `rs` names, so a concurrent evolution fails the CAS
+    // below instead of being reverted; props and schema carry forward
+    // (from the ref's OWN head) unless replaced. SPEC strings, not derived
+    // names: `bucket(4,id)` must survive or projection pruning degrades
+    lazy val main = headManifest(path, rs)
+    val parts = Option(partsOverride).getOrElse(main.map(_.partitions).getOrElse(Nil))
     val partHist = Option(partHistoryOverride)
-      .getOrElse(GeoTable.readPartitionHistory(path))
+      .getOrElse(main.map(_.partitionHistory).getOrElse(Nil))
     val carriedProps =
       if (props != null) props
       else if (refHead > 0) readProps(path, Some(refHead))
@@ -515,10 +551,9 @@ object Snapshots {
     // scoping inverts on the clone)
     var v = math.max(math.max(currentVersion(path), rs.branches.getOrElse(ref, 0)),
       minVersion - 1) + 1
-    var body: Array[Byte] = null
     var placed = false
     while (!placed) {
-      body = mkBody(v).getBytes(StandardCharsets.UTF_8)
+      val body = mkBody(v).getBytes(StandardCharsets.UTF_8)
       try { atomicWriteManifest(path, v, body); placed = true }
       catch { case _: CommitConflictException => v += 1 }
     }
@@ -535,15 +570,6 @@ object Snapshots {
       case e: CommitConflictException =>
         Files.deleteIfExists(manifestPath(path, v))
         throw e
-    }
-    // _graft_manifest.json mirrors MAIN's head for raw-parquet
-    // compatibility — a convenience copy, not the source of truth (reads
-    // resolve through the refs pointer). The JVM lock serializes mirror
-    // writes in-process; cross-process the worst case is a briefly stale
-    // mirror, corrected by the next main commit.
-    if (ref == "main") Snapshots.synchronized {
-      if (mainVersion(path) == v)
-        atomicReplace(Paths.get(path, GeoTable.ManifestName), body)
     }
     v
   }
@@ -947,9 +973,10 @@ object Snapshots {
     val rs = refsState(path)
     val head = rs.mainHead(path)
     require(head > 0, s"no table at $path")
-    val current = GeoTable.readPartitionSpecs(path)
-    val history = GeoTable.readPartitionHistory(path)
-    val schema = readSchema(path, Some(head))
+    val m = manifest(path, Some(head))
+    val current = m.specs
+    val history = m.partitionHistory
+    val schema = m.schema
     val adds = add.map(Transforms.parse).map { t0 =>
       require(!t0.isInstanceOf[Transforms.Identity],
         s"ADD PARTITION FIELD ${t0.spec}: identity partitioning cannot be evolved " +
@@ -1153,10 +1180,11 @@ object Snapshots {
     // per distinct partition-value group (PartitionPaths is the one seat
     // of dir parsing, so serving matches the scan exactly).
     val (absNames, relNames) = names.partition(_.startsWith("/"))
-    val parts = GeoTable.readPartitionCols(path)
+    val head = headManifest(path)
+    val parts = head.map(_.partitionCols).getOrElse(Nil)
     val schemaTypes: Map[String, org.apache.spark.sql.types.DataType] =
       if (absNames.isEmpty || parts.isEmpty) Map.empty
-      else GeoTable.ensureSchema(spark, path).fields.map(f => f.name -> f.dataType).toMap
+      else GeoTable.ensureSchema(spark, path, head).fields.map(f => f.name -> f.dataType).toMap
     def castParts(df: DataFrame): DataFrame = parts.foldLeft(df) { (d, p) =>
       schemaTypes.get(p).filter(_ => d.columns.contains(p))
         .map(dt => d.withColumn(p, org.apache.spark.sql.functions.col(p).cast(dt)))
@@ -1270,8 +1298,8 @@ object Snapshots {
     * #dirs and #tasks×#dirs files at 100 TB. A declared `write.order`
     * then sorts LOCALLY within the shuffled tasks.
     */
-  private def writeShape(df: DataFrame, path: String): DataFrame = {
-    val specs = GeoTable.readPartitionSpecs(path)
+  private def writeShape(df: DataFrame, path: String,
+      specs: Seq[Transforms.Transform]): DataFrame = {
     val hash = currentVersion(path) > 0 && specs.nonEmpty &&
       readProps(path).get("write.distribution-mode").exists(_.equalsIgnoreCase("hash"))
     if (!hash) applyWriteOrder(df, path)
@@ -1331,7 +1359,7 @@ object Snapshots {
     // declared uuid/fixed/time columns validate + canonicalize first
     // (map-only, codegen'd; identity for undeclared tables)
     val physical = TableSchema.toPhysical(
-      encodeForStorage(writeShape(ExtendedTypes.validate(df, path), path), path), path)
+      encodeForStorage(writeShape(ExtendedTypes.validate(df, path), path, specs), path), path)
     // derive missing transform partition columns (appends carry source
     // cols; CoW rewrites already carry the derived ones)
     val withDerived = specs
@@ -1774,16 +1802,6 @@ object Snapshots {
     }
   }
 
-  /** Dynamic partition overwrite from a DataFrame — the one-call face of
-    * [[commitDynamicOverwrite]] (`df.writeTo(t).overwritePartitions()`
-    * routes through the DSv2 batch write instead).
-    */
-  def overwriteDynamic(df: DataFrame, path: String,
-      extraProps: Map[String, String] = Map.empty): Int = {
-    val (added, _) = writeBack(df, path)
-    commitDynamicOverwrite(df.sparkSession, path, added, extraProps)
-  }
-
   private def flattenAnd(f: org.apache.spark.sql.sources.Filter): Seq[org.apache.spark.sql.sources.Filter] =
     f match {
       case org.apache.spark.sql.sources.And(l, r) => flattenAnd(l) ++ flattenAnd(r)
@@ -1823,7 +1841,7 @@ object Snapshots {
         props = propsWithExtras(path, head, extraProps))
       else {
         val current = readManifest(path, Some(head))
-        val identCols = GeoTable.readPartitionSpecs(path)
+        val identCols = manifest(path, Some(head)).specs
           .collect { case Transforms.Identity(c) => c }.toSet
         val atomic = filters.flatMap(flattenAnd)
         // identity-partition attribute of an exactly-evaluable conjunct
@@ -2858,13 +2876,17 @@ object Snapshots {
     // PIN the head ONCE: resolving it per sub-read (manifest, pos/eq/
     // predicate deletes) would tear the view under a concurrent commit —
     // serving one version's files with ANOTHER version's (possibly
-    // cleared) delete state resurrects deleted rows
-    val v = Some(version.orElse(wapReadVersion(path)).getOrElse(mainVersion(path)))
+    // cleared) delete state resurrects deleted rows. One refs read serves
+    // the head and main's table-level metadata.
+    val rs = refsState(path)
+    val head = headManifest(path, rs)
+    val v = Some(version.orElse(wapBranchFor(path).flatMap(rs.branches.get))
+      .getOrElse(rs.mainHead(path)))
     val m = readManifest(path, v)
     GeoTable.applyDeletes(
       applyEqDeletes(spark, path,
         applyPosDeletes(spark, path,
-          GeoTable.readWithStats(spark, path, m),
+          GeoTable.readWithStats(spark, path, m, head),
           readPosDeletes(path, v)),
         readEqDeletes(path, v), m),
       readDeletes(path, v))
@@ -2880,8 +2902,10 @@ object Snapshots {
     */
   def schema(spark: SparkSession, path: String,
       version: Option[Int] = None): org.apache.spark.sql.types.StructType = {
-    manifest(path, version) // a missing snapshot fails like read does
-    GeoTable.logicalSchema(spark, path)
+    val head = headManifest(path)
+    // a missing snapshot fails like read does
+    if (version.isDefined || head.isEmpty) manifest(path, version)
+    GeoTable.logicalSchema(spark, path, head)
   }
 
   /** Changelog between two snapshots: row-level inserts/deletes with a
@@ -3626,7 +3650,7 @@ object Snapshots {
       // repartition would scatter each dir's rows over all n tasks and the
       // per-(task, dir) file writer would emit n small files per dir —
       // the opposite of compaction
-      val partKeys = GeoTable.readPartitionSpecs(path).map(t => Transforms.writeExpr(t, rows))
+      val partKeys = manifest(path, Some(head)).specs.map(t => Transforms.writeExpr(t, rows))
       val shaped =
         if (strategy == "sort")
           rows.repartitionByRange(n, (partKeys ++ sortCols): _*)
@@ -3932,9 +3956,9 @@ object Snapshots {
     require(currentVersion(target) == 0, s"target exists: $target")
     Files.createDirectories(Paths.get(target))
     val head = mainVersion(source)
-    val m = readManifest(source, Some(head))
-    val toLink = m.map(_.path) ++ readPosDeletes(source, Some(head)) ++
-      readEqDeletes(source, Some(head)).map(_.path)
+    val srcHead = manifest(source, Some(head))
+    val m = srcHead.files
+    val toLink = m.map(_.path) ++ srcHead.posDeletes ++ srcHead.eqDeletes.map(_.path)
     toLink.foreach { rel =>
       val dst = Paths.get(target, rel)
       Files.createDirectories(dst.getParent)
@@ -3951,10 +3975,12 @@ object Snapshots {
       // the clone's version counter must start past all of them — a clone
       // restarting at v1 would let cloned seq=8 deletes hide fresh v2
       // appends, and fresh deletes (seq=2) exempt cloned addedV=5 files
-      publish(target, refsState(target), m, readDeletes(source, Some(head)),
-        readPosDeletes(source, Some(head)), readProps(source, Some(head)),
-        eqDeletes = readEqDeletes(source, Some(head)),
-        schema = readSchema(source, Some(head)), minVersion = head)
+      // the partition spec too: the clone has no head of its own to carry
+      // it from, and a dropped identity spec would read its column as nulls
+      publish(target, refsState(target), m, srcHead.deletes, srcHead.posDeletes,
+        readProps(source, Some(head)), eqDeletes = srcHead.eqDeletes, schema = srcHead.schema,
+        partsOverride = srcHead.partitions, partHistoryOverride = srcHead.partitionHistory,
+        minVersion = head)
     }
   }
 

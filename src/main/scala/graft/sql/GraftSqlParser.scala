@@ -145,8 +145,7 @@ object GraftStatements {
               else None)
           } else {
             val full = java.nio.file.Paths.get(wh.get, parts.tail: _*)
-            def isTable(p: java.nio.file.Path) =
-              java.nio.file.Files.exists(p.resolve(graft.spatial.GeoTable.ManifestName))
+            def isTable(p: java.nio.file.Path) = graft.spatial.Snapshots.isTable(p.toString)
             // branch-scoped DML target (`cat.db.t.branch_x`): resolve the
             // parent table and carry the branch as the write ref
             val last = parts.last
@@ -707,8 +706,7 @@ case class CallProcedureCommand(proc: String, pos: Seq[Any], named: Map[String, 
     // (`CALL gcat.system.proc('db.t')`)
     val rawTable = str(arg(0, "table"))
     val table =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(rawTable,
-          graft.spatial.GeoTable.ManifestName))) rawTable
+      if (graft.spatial.Snapshots.isTable(rawTable)) rawTable
       else GraftStatements.graftPath(rawTable).map(_._1)
         .orElse(GraftStatements.graftPath(s"$catalog.$rawTable").map(_._1))
         .getOrElse(rawTable)

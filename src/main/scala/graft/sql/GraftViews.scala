@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{BooleanType, StringType}
 
 import graft.sources.GraftView
-import graft.spatial.GeoTable
+import graft.spatial.Snapshots
 
 /** Catalog-level views for graft catalogs — the rebuild of the reference's
   * `ResolveViews` extension path (`IcebergSparkSessionExtensions.scala:41-43`
@@ -332,7 +332,7 @@ case class GraftCreateViewCommand(dir: String, name: String, sql: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val d = java.nio.file.Paths.get(dir)
     val vp = d.resolve(GraftViews.ViewFileName)
-    require(!java.nio.file.Files.exists(d.resolve(GeoTable.ManifestName)),
+    require(!Snapshots.isTable(dir),
       s"cannot create view $name: a table with this name exists")
     if (java.nio.file.Files.exists(vp) && !replace) {
       if (ifNotExists) return Seq.empty

@@ -71,12 +71,15 @@ class GraftStreamProvider extends TableProvider with DataSourceRegister {
 }
 
 object GraftStreamTable {
-  /** Physical data schema + partition columns, straight from the manifest
-    * (inference only for legacy manifests without a persisted schema).
+  /** Physical data schema + partition columns, straight from main head's
+    * manifest `head` (inference only for legacy manifests without a
+    * persisted schema).
     */
-  def tableSchema(path: String): StructType = {
-    val full = GeoTable.ensureSchema(SparkSession.active, path)
-    val partCols = GeoTable.readPartitionCols(path)
+  def tableSchema(path: String): StructType = tableSchema(path, Snapshots.headManifest(path))
+
+  def tableSchema(path: String, head: Option[GeoTable.Manifest]): StructType = {
+    val full = GeoTable.ensureSchema(SparkSession.active, path, head)
+    val partCols = head.map(_.partitionCols).getOrElse(Nil)
     val data = TableSchema.physicalSchema(path).getOrElse(
       StructType(full.fields.filterNot(f => partCols.contains(f.name))))
     StructType(data.fields ++ partCols.flatMap(c => full.fields.find(_.name == c)))
@@ -358,8 +361,9 @@ class GraftMicroBatchStream(path: String, maxFiles: Int,
     val e = GraftStreamOffset(end).filesSeen.toInt
     val slice = fileChain().slice(s, e)
     if (slice.isEmpty) return Array.empty
-    val schema = GraftStreamTable.tableSchema(path)
-    val partCols = GeoTable.readPartitionCols(path)
+    val meta = Snapshots.headManifest(path)
+    val schema = GraftStreamTable.tableSchema(path, meta)
+    val partCols = meta.map(_.partitionCols).getOrElse(Nil)
     val partitionSchema = StructType(partCols.flatMap(c => schema.fields.find(_.name == c)))
     val dataSchema = StructType(schema.fields.filterNot(f => partCols.contains(f.name)))
     // delete state of the current committed snapshot of the streamed ref,
@@ -374,7 +378,7 @@ class GraftMicroBatchStream(path: String, maxFiles: Int,
     // GraftFileIndex parses hive-layout partition values from the paths —
     // the same code path the batch relation uses
     val index = new GraftFileIndex(spark, new Path(path), slice, dataSchema, partitionSchema,
-      GeoTable.readPruningSpecs(path))
+      meta.map(_.pruningSpecs).getOrElse(Nil))
     // the readers interpret PartitionedFile.partitionValues POSITIONALLY
     // against THEIR partition schema: the path stream's factory uses the
     // full table partition schema (identity), but the catalog stream's
@@ -424,8 +428,9 @@ class GraftMicroBatchStream(path: String, maxFiles: Int,
     val sess = spark
     val conf = sess.sessionState.newHadoopConf()
     val sqlConf = sess.sessionState.conf
-    val schema = GraftStreamTable.tableSchema(path)
-    val partCols = GeoTable.readPartitionCols(path)
+    val meta = Snapshots.headManifest(path)
+    val schema = GraftStreamTable.tableSchema(path, meta)
+    val partCols = meta.map(_.partitionCols).getOrElse(Nil)
     val partitionSchema = StructType(partCols.flatMap(c => schema.fields.find(_.name == c)))
     val dataSchema = StructType(schema.fields.filterNot(f => partCols.contains(f.name)))
     // the reader-side conf ParquetScan.createReaderFactory wires up —

@@ -85,7 +85,7 @@ class CatalogReviewSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE revreg.db.t1 (id BIGINT)")
     spark.sql("INSERT INTO revreg.db.t1 SELECT id FROM range(4)")
     val t1loc = java.nio.file.Paths.get(wh, "db", "t1")
-    assert(Files.exists(t1loc.resolve(graft.spatial.GeoTable.ManifestName)))
+    assert(graft.spatial.Snapshots.isTable(t1loc.toString))
     // a second ident pointed at t1's directory would silently replace its
     // data and make either DROP PURGE destroy the other table
     val e = intercept[Exception] {

@@ -105,8 +105,6 @@ class OperatorEdgeSpec extends AnyFunSuite {
     val stripped = txt.replaceAll("""("cols":\[[^\]]*\]),"seq":\d+""", "$1")
     assert(stripped != txt, "fixture must strip a seq stamp")
     Files.write(mp, stripped.getBytes("UTF-8"))
-    val mirror = java.nio.file.Paths.get(dir, graft.spatial.GeoTable.ManifestName)
-    Files.write(mirror, stripped.getBytes("UTF-8"))
     assert(Snapshots.readEqDeletes(dir).exists(_.seq == 0), "fixture is legacy")
     assert(Snapshots.read(spark, dir).count() == 16, "V1 applies seq=0")
     assert(spark.read.format("graft").load(dir).count() == 16,

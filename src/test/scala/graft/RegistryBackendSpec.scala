@@ -91,8 +91,7 @@ class RegistryBackendSpec extends AnyFunSuite {
     assert(graft.sources.RegistryBackend.lookup(warehouse, Seq("db", "away"))
       .exists(_.startsWith(elsewhere)), "location must be the custom one")
     // data really lives there, not under the warehouse
-    assert(Files.exists(java.nio.file.Paths.get(s"$elsewhere/awaydata",
-      graft.spatial.GeoTable.ManifestName)))
+    assert(graft.spatial.Snapshots.isTable(s"$elsewhere/awaydata"))
     assert(!Files.exists(java.nio.file.Paths.get(warehouse, "db", "away")))
     assert(spark.sql("SELECT * FROM rcat.db.away").count() == 30)
     // DML through the custom parser resolves via the registry too
@@ -149,8 +148,7 @@ class RegistryBackendSpec extends AnyFunSuite {
       "AS SELECT id, id * 3 AS v FROM range(15)")
     assert(graft.sources.RegistryBackend.lookup(warehouse, Seq("db", "ctl"))
       .exists(_.startsWith(elsewhere)), "CTAS must register the custom location")
-    assert(Files.exists(java.nio.file.Paths.get(s"$elsewhere/ctldata",
-      graft.spatial.GeoTable.ManifestName)))
+    assert(graft.spatial.Snapshots.isTable(s"$elsewhere/ctldata"))
     assert(!Files.exists(java.nio.file.Paths.get(warehouse, "db", "ctl")))
     assert(spark.sql("SELECT * FROM rcat.db.ctl").count() == 15)
     spark.sql("DROP TABLE rcat.db.ctl")

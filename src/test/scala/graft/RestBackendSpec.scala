@@ -94,8 +94,7 @@ class RestBackendSpec extends AnyFunSuite {
       s"LOCATION '$elsewhere/awaydata'")
     spark.sql("INSERT INTO restcat.db.away SELECT id FROM range(30)")
     assert(graft.sources.RestBackend.lookup(uri, Seq("db", "away")).exists(_.startsWith(elsewhere)))
-    assert(Files.exists(java.nio.file.Paths.get(s"$elsewhere/awaydata",
-      graft.spatial.GeoTable.ManifestName)))
+    assert(graft.spatial.Snapshots.isTable(s"$elsewhere/awaydata"))
     assert(!Files.exists(java.nio.file.Paths.get(warehouse, "db", "away")))
     assert(spark.sql("SELECT * FROM restcat.db.away").count() == 30)
     spark.sql(s"CREATE TABLE restcat.db.ctl USING graft LOCATION '$elsewhere/ctldata' " +
@@ -155,7 +154,7 @@ class RestBackendSpec extends AnyFunSuite {
     assert(graft.sources.RestBackend.lookup(uri, Seq("tmpns", "x")).isEmpty)
     // cascade drops through non-purging dropTable: data files remain
     // (the reference's DROP-without-PURGE posture, SparkCatalog.java:354)
-    assert(Files.exists(dataDir.resolve(graft.spatial.GeoTable.ManifestName)),
+    assert(graft.spatial.Snapshots.isTable(dataDir.toString),
       "cascade must deregister, not purge")
     assert(!spark.sql("SHOW NAMESPACES IN restcat").collect()
       .map(_.getString(0)).contains("tmpns"))
@@ -169,7 +168,7 @@ class RestBackendSpec extends AnyFunSuite {
     val loc1 = java.nio.file.Paths.get(graft.sources.RestBackend.lookup(uri, Seq("db", "dp")).get)
     spark.sql("DROP TABLE restcat.db.dp")
     assert(graft.sources.RestBackend.lookup(uri, Seq("db", "dp")).isEmpty)
-    assert(Files.exists(loc1.resolve(graft.spatial.GeoTable.ManifestName)),
+    assert(graft.spatial.Snapshots.isTable(loc1.toString),
       "plain DROP must not delete data")
     // re-CREATE must NOT resurrect the dropped rows: fresh unique location
     spark.sql("CREATE TABLE restcat.db.dp (id BIGINT) USING graft")

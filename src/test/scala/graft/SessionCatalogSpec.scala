@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.spatial.GeoTable
+import graft.spatial.Snapshots
 
 /** `spark_catalog` override through [[graft.sources.GraftSessionCatalog]]:
   * graft tables served natively, everything else delegated to the built-in
@@ -50,11 +50,11 @@ class SessionCatalogSpec extends AnyFunSuite {
     // plain table -> delegate (nothing lands in the graft warehouse)
     spark.range(0, 10).toDF("id").write.format("parquet").saveAsTable(s"$sdb.plain")
     assert(spark.sql(s"SELECT count(*) FROM $sdb.plain").head.getLong(0) == 10)
-    assert(!Files.exists(Paths.get(wh, sdb, "plain", GeoTable.ManifestName)))
+    assert(!Snapshots.isTable(Paths.get(wh, sdb, "plain").toString))
     // CTAS routes by provider: USING graft -> warehouse-backed graft table
     spark.sql(
       s"CREATE TABLE $sdb.g USING graft AS SELECT id, CAST(id AS DOUBLE) AS x FROM $sdb.plain")
-    assert(Files.exists(Paths.get(wh, sdb, "g", GeoTable.ManifestName)),
+    assert(Snapshots.isTable(Paths.get(wh, sdb, "g").toString),
       "graft CTAS must land in the warehouse")
     assert(spark.sql(s"SELECT count(*) FROM $sdb.g").head.getLong(0) == 10)
     // writes + snapshots work through the default catalog name
@@ -79,7 +79,7 @@ class SessionCatalogSpec extends AnyFunSuite {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $sdb2")
     spark.sql(s"CREATE TABLE $sdb2.p USING parquet AS SELECT 1 AS a")
     assert(spark.sql(s"SELECT a FROM $sdb2.p").head.getInt(0) == 1)
-    assert(!Files.exists(Paths.get(wh, sdb2, "p", GeoTable.ManifestName)))
+    assert(!Snapshots.isTable(Paths.get(wh, sdb2, "p").toString))
   }
 
   test("pure delegation without a warehouse conf") {
@@ -104,7 +104,7 @@ class SessionCatalogSpec extends AnyFunSuite {
     val db = freshDb("repl")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     spark.sql(s"CREATE TABLE $db.t USING graft AS SELECT id FROM range(5)")
-    assert(Files.exists(Paths.get(wh, db, "t", GeoTable.ManifestName)))
+    assert(Snapshots.isTable(Paths.get(wh, db, "t").toString))
     // drive the staging seam directly (Spark's analyzer rejects RTAS for
     // V1 session-catalog providers before reaching it, but V2 providers
     // and direct API users land here)
@@ -116,7 +116,7 @@ class SessionCatalogSpec extends AnyFunSuite {
       Array.empty,
       Map(TableCatalog.PROP_PROVIDER -> "parquet").asJava)
     staged.commitStagedChanges()
-    assert(!Files.exists(Paths.get(wh, db, "t", GeoTable.ManifestName)),
+    assert(!Snapshots.isTable(Paths.get(wh, db, "t").toString),
       "the graft side must be dropped by the replace, not shadow the delegate")
     // loadTable now serves the DELEGATE table (the empty replacement)
     assert(spark.sql(s"SELECT count(*) FROM $db.t").head.getLong(0) == 0,

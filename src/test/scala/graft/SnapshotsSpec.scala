@@ -500,14 +500,15 @@ class SnapshotsSpec extends AnyFunSuite {
     GeoTable.write(mkDf(0 until 30, 0).drop("geom_bbox"), dir, "geom", res = 8, numFiles = 2)
     val expected = Snapshots.read(spark, dir).schema
     // the manifest carries the authoritative schema...
-    assert(GeoTable.readSchema(dir).isDefined)
+    assert(Snapshots.readSchema(dir).isDefined)
     // ...so relation construction must work with every data file GONE —
     // the zero-object-store-round-trip claim made testable (the round-2
     // code called spark.read.parquet(path).schema, which lists the table
     // and samples footers on every read)
     val files = Snapshots.readManifest(dir).map(_.path)
     files.foreach(f => Files.delete(java.nio.file.Paths.get(dir, f)))
-    val rel = GeoTable.buildRelation(spark, dir, Snapshots.readManifest(dir))
+    val rel = GeoTable.buildRelation(spark, dir, Snapshots.readManifest(dir),
+      Snapshots.headManifest(dir))
     assert(rel.schema.fieldNames.sameElements(expected.fieldNames))
     // schema evolution metadata ops are listing-free too
     graft.spatial.TableSchema.renameColumn(spark, dir, "id", "ident")

@@ -143,19 +143,13 @@ class StreamingSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(dir)
     GeoTable.writeManifest(spark, dir)
     Snapshots.deleteByEquality(spark, dir, Seq(3L, 7L).toDF("id"))
-    // strip the sequence stamps from the manifest — the pre-stamping
+    // strip the sequence stamps from the head manifest — the pre-stamping
     // legacy form parseEqDeletes reads back as seq=0
-    val mf = java.nio.file.Paths.get(dir, GeoTable.ManifestName)
-    val txt = new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
-      .replaceAll(""","seq":\d+}""", "}")
-    java.nio.file.Files.write(mf, txt.getBytes("UTF-8"))
     val head = Snapshots.mainVersion(dir)
     val vf = java.nio.file.Paths.get(dir, s"_graft_manifest_v$head.json")
-    if (java.nio.file.Files.exists(vf)) {
-      val vtxt = new String(java.nio.file.Files.readAllBytes(vf), "UTF-8")
-        .replaceAll(""","seq":\d+}""", "}")
-      java.nio.file.Files.write(vf, vtxt.getBytes("UTF-8"))
-    }
+    val vtxt = new String(java.nio.file.Files.readAllBytes(vf), "UTF-8")
+      .replaceAll(""","seq":\d+}""", "}")
+    java.nio.file.Files.write(vf, vtxt.getBytes("UTF-8"))
     // batch read filters the legacy delete
     assert(Snapshots.read(spark, dir).where("id IN (3, 7)").count() == 0)
     // the stream must agree — a strict addedV < seq drops seq==0 entirely
