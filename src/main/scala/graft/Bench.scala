@@ -223,6 +223,9 @@ object Bench {
     // sorted order), not a plan change.
     // optional comma-separated query filter for local iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
+    // a query that throws in any pass is reported as failed and left out
+    // of every total: its time-to-exception is not a query time
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     def runAll(): Seq[(String, Double)] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -235,7 +238,10 @@ object Bench {
         Thread.sleep(75)
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+        }
         val dt = (System.nanoTime() - t0) / 1e9
         // drop the completed query's localCheckpoint blocks: the dedup /
         // curation queries each materialize multi-hundred-MB shingle
@@ -260,17 +266,23 @@ object Bench {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    val keys = warm.head.keys.toSeq.sorted
+    val keys = warm.head.keys.toSeq.sorted.filterNot(failed.contains)
     val results = keys.map(k => k -> median(warm.map(_(k))))
     val mins = keys.map(k => k -> warm.map(_(k)).min)
+    val coldOk = cold.filterNot { case (k, _) => failed.contains(k) }
     def fmt(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val minTotal = mins.map(_._2).sum
-    val coldTotal = cold.map(_._2).sum
+    val coldTotal = coldOk.map(_._2).sum
+    // JSON-escape interpolated strings: an env-supplied sidecar path with
+    // a quote/backslash must not corrupt the machine-parsed line
+    def jq(s: String): String =
+      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
+    val failedJson = failed.map(k => "\"" + jq(k) + "\"").mkString("[", ",", "]")
     // Full per-query line (the historical contract line, every query entry
     // kept — nothing removed or renamed) ...
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":${fmt(results)},"query_min":${fmt(mins)},"query_cold":${fmt(cold)},"min_total":$minTotal,"cold_total":$coldTotal,"warm_passes":$passes,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":${fmt(results)},"query_min":${fmt(mins)},"query_cold":${fmt(coldOk)},"min_total":$minTotal,"cold_total":$coldTotal,"warm_passes":$passes,"failed":$failedJson,"sf":"$sfDir"}"""
     println(fullLine)
     // ... then the same payload as a SIDECAR file, and a COMPACT totals
     // line as the FINAL stdout line. Why (r19, measurement-contract fix —
@@ -279,7 +291,9 @@ object Bench {
     // full line carries three 116-entry maps (~15 KB — the query names
     // alone are ~1.8 KB), so every round's tail since r04 begins mid-line
     // and PERF_r*.json has been blind (`parsed: null`). The compact line
-    // (~250 B) fits the window even with sbt's trailing "[success]" line.
+    // (~250 B) fits the window; it is the bare last stdout line, as
+    // `build.sbt` sends `run` output straight to stdout and turns off
+    // sbt's trailing "[success]" line.
     // ADDITIVE only: the timed region, query set, pass structure and the
     // full line above are untouched; the sidecar repeats the full payload
     // byte-for-byte for the judge.
@@ -291,11 +305,8 @@ object Bench {
     catch { case e: Exception =>
       System.err.println(s"[bench] sidecar write skipped: $e")
     }
-    // JSON-escape the interpolated paths: an env-supplied sidecar path
-    // with a quote/backslash must not corrupt the machine-parsed line
-    def jq(s: String): String =
-      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"min_total":$minTotal,"cold_total":$coldTotal,"warm_passes":$passes,"queries_sidecar":"${jq(sidecar.toString)}","sf":"${jq(sfDir)}"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"min_total":$minTotal,"cold_total":$coldTotal,"warm_passes":$passes,"failed":$failedJson,"queries_sidecar":"${jq(sidecar.toString)}","sf":"${jq(sfDir)}"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -37,6 +37,102 @@ object GeoCodec {
   def envelope(minX: Double, minY: Double, maxX: Double, maxY: Double): Geometry =
     factory.toGeometry(new Envelope(minX, maxX, minY, maxY))
 
+  // --- envelopes read straight from WKB bytes, without a JTS decode
+
+  /** The JTS `Envelope` of a nonempty 2D POINT or POLYGON, plus JTS's own
+    * `Polygon.isRectangle` verdict on it; its `intersects`/`covers` are
+    * JTS's envelope tests, so a decision made on it is the one JTS makes on
+    * the decoded geometries.
+    */
+  final class WkbBox(minX: Double, minY: Double, maxX: Double, maxY: Double,
+      val isRectangle: Boolean) extends Envelope(minX, maxX, minY, maxY)
+
+  /** The [[WkbBox]] of a WKB or EWKB value, read from the bytes: either
+    * byte order, an EWKB SRID skipped. Only what [[readWkb]] decodes to the
+    * same nonempty POINT or POLYGON gets one: a polygon's envelope is its
+    * shell's, so the shell is read and every ring's count, closure and
+    * length is checked. Z/M, multi-geometries and collections, empties,
+    * NaN coordinates, rings JTS would reject or repair, and truncated input
+    * are unknown: `null`, and the caller decodes.
+    */
+  def wkbBox(b: Array[Byte]): WkbBox = {
+    if (b.length < 5 || (b(0) != 0 && b(0) != 1)) return null
+    val little = b(0) == 1
+    def int(i: Int): Int = {
+      val v = ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
+        ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
+      if (little) Integer.reverseBytes(v) else v
+    }
+    def dbl(i: Int): Double = {
+      val hi = int(i).toLong & 0xffffffffL
+      val lo = int(i + 4).toLong & 0xffffffffL
+      java.lang.Double.longBitsToDouble(if (little) (lo << 32) | hi else (hi << 32) | lo)
+    }
+    // a ring of n points at `at` ends where it starts (JTS `isClosed`)
+    def closed(at: Int, n: Int): Boolean =
+      dbl(at) == dbl(at + 16 * (n - 1)) && dbl(at + 8) == dbl(at + 16 * (n - 1) + 8)
+    // `Polygon.isRectangle` on a 5-point shell: every vertex on the
+    // envelope, and each step moves along exactly one axis
+    def isRectangle(at: Int, minX: Double, minY: Double, maxX: Double, maxY: Double): Boolean = {
+      var i = 0
+      var ok = true
+      while (ok && i < 5) {
+        val x = dbl(at + 16 * i)
+        val y = dbl(at + 16 * i + 8)
+        ok = (x == minX || x == maxX) && (y == minY || y == maxY) &&
+          (i == 0 || (x != dbl(at + 16 * (i - 1))) != (y != dbl(at + 16 * (i - 1) + 8)))
+        i += 1
+      }
+      ok
+    }
+    val ewkbSrid = 0x20000000
+    val t = int(1)
+    var off = if ((t & ewkbSrid) != 0) 9 else 5
+    def fits(n: Long): Boolean = off + n <= b.length
+    (t & ~ewkbSrid) match {
+      case 1 =>
+        if (!fits(16)) return null
+        val x = dbl(off)
+        val y = dbl(off + 8)
+        if (x.isNaN || y.isNaN) null else new WkbBox(x, y, x, y, false)
+      case 3 =>
+        if (!fits(4)) return null
+        val rings = int(off)
+        off += 4
+        if (rings < 1 || !fits(4)) return null
+        val n = int(off)
+        off += 4
+        if (n < 4 || !fits(16L * n)) return null
+        var minX, minY = Double.PositiveInfinity
+        var maxX, maxY = Double.NegativeInfinity
+        var i = 0
+        while (i < n) {
+          val x = dbl(off + 16 * i)
+          val y = dbl(off + 16 * i + 8)
+          if (x.isNaN || y.isNaN) return null
+          if (x < minX) minX = x
+          if (x > maxX) maxX = x
+          if (y < minY) minY = y
+          if (y > maxY) maxY = y
+          i += 1
+        }
+        if (!closed(off, n)) return null
+        val rect = rings == 1 && n == 5 && isRectangle(off, minX, minY, maxX, maxY)
+        off += 16 * n
+        var r = 1
+        while (r < rings) { // holes: only their framing, the shell bounds them
+          if (!fits(4)) return null
+          val h = int(off)
+          off += 4
+          if (h < 0 || (h > 0 && h < 4) || !fits(16L * h) || (h > 0 && !closed(off, h))) return null
+          off += 16 * h
+          r += 1
+        }
+        new WkbBox(minX, minY, maxX, maxY, rect)
+      case _ => null
+    }
+  }
+
   // --- minimal GeoJSON codec (jts-core has no GeoJSON IO; format per RFC 7946)
 
   def writeGeoJson(g: Geometry): String = {

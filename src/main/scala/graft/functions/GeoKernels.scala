@@ -16,6 +16,11 @@ import graft.spatial.HilbertCurve2D
   * and return BOXED results; `null` means SQL NULL (e.g. `ST_X` of a
   * non-point), which the shared codegen template maps to the null flag.
   * JTS reader/writer thread-safety is handled inside [[GeoCodec]].
+  *
+  * `intersects`/`covers` — the exact refine of every spatial read — decide
+  * from envelopes read off the WKB bytes before decoding, taking exactly
+  * JTS's own short-circuits (see the predicates section), so most rows of
+  * a window query never reach `WKBReader`.
   */
 object GeoKernels {
 
@@ -50,8 +55,40 @@ object GeoKernels {
 
   // ---- predicates --------------------------------------------------------
 
-  def intersects(a: Array[Byte], b: Array[Byte]): java.lang.Boolean = g(a).intersects(g(b))
-  def covers(a: Array[Byte], b: Array[Byte]): java.lang.Boolean = g(a).covers(g(b))
+  /* ST_Intersects and ST_Covers decide from the envelopes first
+   * (`GeoCodec.wkbBox`, read from the bytes) and decode only when the
+   * envelopes cannot decide. The rules are the short-circuits JTS 1.20's
+   * `Geometry.intersects` and `GeometryRelate.covers` take themselves,
+   * in the same order, so the answer is JTS's answer:
+   *  - intersects: disjoint envelopes are false; if `a` is a rectangle
+   *    (`Polygon.isRectangle`), JTS runs `RectangleIntersects(a, b)`,
+   *    whose first test is true when a's envelope contains b's (b is one
+   *    connected element); otherwise, the same for `b` as the rectangle;
+   *  - covers: false unless a's envelope covers b's; then true when `a`
+   *    is a rectangle (JTS's dimension tests cannot fail for a polygon
+   *    `a`, and its envelope test is this one).
+   * Whatever the envelopes leave open — and every value `wkbBox` does not
+   * know — goes to the decoded JTS call.
+   */
+  def intersects(a: Array[Byte], b: Array[Byte]): java.lang.Boolean = {
+    val ea = GeoCodec.wkbBox(a)
+    val eb = if (ea == null) null else GeoCodec.wkbBox(b)
+    if (eb != null) {
+      if (!ea.intersects(eb)) return false
+      if (ea.isRectangle) { if (ea.covers(eb)) return true }
+      else if (eb.isRectangle && eb.covers(ea)) return true
+    }
+    g(a).intersects(g(b))
+  }
+  def covers(a: Array[Byte], b: Array[Byte]): java.lang.Boolean = {
+    val ea = GeoCodec.wkbBox(a)
+    val eb = if (ea == null) null else GeoCodec.wkbBox(b)
+    if (eb != null) {
+      if (!ea.covers(eb)) return false
+      if (ea.isRectangle) return true
+    }
+    g(a).covers(g(b))
+  }
   def contains(a: Array[Byte], b: Array[Byte]): java.lang.Boolean = g(a).contains(g(b))
   def within(a: Array[Byte], b: Array[Byte]): java.lang.Boolean = g(a).within(g(b))
 

@@ -1769,6 +1769,14 @@ object GraftScanFilterPushdown
           vs.map { case ce.Literal(v, _) => ext(v) }.toArray))
       case ce.IsNull(a) => name(a).map(sources.IsNull)
       case ce.IsNotNull(a) => name(a).map(sources.IsNotNull)
+      // an OR of conjunctions — the spatial rewrite of `ST_Intersects(g, A)
+      // OR ST_Intersects(g, B)`, or a literal-table join bound — prunes
+      // only if each branch translates. A pruning filter need only be
+      // implied by the condition, so a conjunction keeps what translates.
+      case ce.And(l, r) => (toV1(l), toV1(r)) match {
+        case (Some(a), Some(b)) => Some(sources.And(a, b))
+        case (a, b) => a.orElse(b)
+      }
       case ce.Or(l, r) => for (a <- toV1(l); b <- toV1(r)) yield sources.Or(a, b)
       case _ => None
     }

@@ -5,7 +5,7 @@ import org.locationtech.jts.geom.Envelope
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{BinaryType, DoubleType}
 
@@ -73,11 +73,12 @@ object SpatialPredicatePushdown extends Rule[LogicalPlan] {
     //    type's semantics, outer and anti included — is unchanged);
     //  - WINDOW-BOUND PROPAGATION: a side whose join geometry is provably
     //    inside a literal envelope (an ST_Covers(lit, g) filter below the
-    //    join) bounds the OTHER side of any cross-side intersects/covers
-    //    pair — the matched pair's geometries share a point inside the
-    //    window, so the other geometry's bbox must intersect it. That
-    //    constant conjunct injects as a child Filter (join-type gated
-    //    like ordinary pushdown) and reaches FILE pruning.
+    //    join, or a literal table's own rows) bounds the OTHER side of
+    //    any cross-side intersects/covers pair — the matched pair's
+    //    geometries share a point inside the window, so the other
+    //    geometry's bbox must intersect it. That constant conjunct
+    //    injects as a child Filter (join-type gated like ordinary
+    //    pushdown) and reaches FILE pruning.
     // Shadow columns pruned away below the join are re-EXPOSED through
     // the interleaving Projects (pass-through attributes only); binding
     // stays qualifier-checked and DECLINES on ambiguity like the Filter
@@ -109,9 +110,9 @@ object SpatialPredicatePushdown extends Rule[LogicalPlan] {
       sides.filter(s => canFilterSide(s._2, j.joinType)).flatMap { case (bSide, tIsLeft) =>
         val target = if (tIsLeft) left2 else right2
         for {
-          env <- boundEnvOf(bSide, gB)
           shadow <- bindShadow(gT, Scope.of(target))
-        } yield (tIsLeft, envConjunct(shadow, env, Intersects))
+          envs <- boundEnvOf(bSide, gB).map(Seq(_)).orElse(literalEnvs(bSide, gB))
+        } yield (tIsLeft, envs.map(envConjunct(shadow, _, Intersects)).reduce[Expression](Or))
       }
     }
     if (fresh.isEmpty && pushes.isEmpty) return j
@@ -274,6 +275,33 @@ object SpatialPredicatePushdown extends Rule[LogicalPlan] {
       case _ => None
     }
 
+  /** Envelopes bounding `g` when it comes from a literal table — a
+    * `LocalRelation` (`VALUES …`) under pass-through Projects: a matched
+    * pair's other geometry must intersect one of them, so the other side
+    * is bounded by their OR. NULL and empty geometries match no spatial
+    * predicate and are skipped; a value that does not parse, or more than
+    * [[MaxLiteralEnvs]] envelopes, declines.
+    */
+  private def literalEnvs(plan: LogicalPlan, g: AttributeReference): Option[Seq[Envelope]] =
+    plan match {
+      case Project(list, child) if list.exists {
+          case a: Attribute => a.exprId == g.exprId
+          case _ => false
+        } => literalEnvs(child, g)
+      case l: LocalRelation if l.output.exists(_.exprId == g.exprId) =>
+        val i = l.output.indexWhere(_.exprId == g.exprId)
+        scala.util.Try(l.data.filterNot(_.isNullAt(i))
+            .map(r => GeoCodec.readWkb(r.getBinary(i))).filterNot(_.isEmpty)
+            .map(_.getEnvelopeInternal)).toOption
+          .filter(es => es.nonEmpty && es.size <= MaxLiteralEnvs)
+      case _ => None
+    }
+
+  /** Cap on the OR a literal table pushes: every file's stats and every
+    * scanned row test each term, and Catalyst recurses through the OR
+    * chain, so a long `VALUES` list joins unbounded rather than grow it. */
+  private[graft] val MaxLiteralEnvs = 32
+
   /** Inject `pred` as a Filter as DEEP as pass-through nodes allow (so
     * [[graft.sources.GraftScanFilterPushdown]] / V1 PhysicalOperation see
     * it directly over the relation), deduping against existing conjuncts
@@ -406,6 +434,10 @@ object SpatialPredicatePushdown extends Rule[LogicalPlan] {
     * And(NULL, true) = NULL. Per-LEAF IsNull keeps file pruning: stats
     * record zero nulls on shadow leaves of normal files, so
     * FileStats.canMatch(IsNull) still excludes them.
+    *
+    * The bounds are double `Literal`s here, for every consumer of the
+    * logical plan; at execution [[HoistBboxBounds]] turns them into
+    * generated-code references, so a new window reuses the compiled code.
     */
   private def envConjunct(bbox: AttributeReference, e: Envelope, mode: Mode): Expression = {
     val (xmin, ymin, xmax, ymax) = (shadowLeaf(bbox, "xmin"), shadowLeaf(bbox, "ymin"),
@@ -455,7 +487,7 @@ object SpatialPredicatePushdown extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  private def isShadowStruct(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
+  private[spatial] def isShadowStruct(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
     case s: org.apache.spark.sql.types.StructType =>
       s.fields.length == 4 &&
         s.fields.map(_.name).toSet == Set("xmin", "ymin", "xmax", "ymax") &&
