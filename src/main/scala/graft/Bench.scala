@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -12,36 +11,19 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The status store still tracks every job/stage/task/SQL execution
-      // with the UI off (it backs the REST API), and the defaults retain
-      // 1000 jobs / 1000 stages / 100k tasks / 1000 SQL executions WITH
-      // full plan-graph strings. Over ~300 query executions (cold + 3
-      // warm passes x 76 queries) that is GBs of driver-heap churn taxing
-      // every later query's GC — measured ~2x inflation on the queries
-      // that run late in the pass. Trim retention to a working set.
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .config("spark.sql.ui.retainedExecutions", "5")
-      .config("spark.appStatusStore.asyncTracking.enable", "false")
-      // The generated-class cache (static conf) defaults to 100 entries;
-      // this workload executes ~116 distinct queries x 4 passes, each
-      // with dozens of codegen units, so at the default every pass
-      // EVICTS every other query's classes and Janino recompiles the
-      // whole workload per pass — measured 2x inflation on the
-      // checkpoint-heavy dedup family vs a focused run whose units fit
-      // the cache (r18 A/B). Size it to the workload, the same posture
-      // any long-running multi-query application takes; this is compiled
-      // CODE reuse across passes, never data or results.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    // The status store still tracks every job/stage/task/SQL execution
+    // with the UI off (it backs the REST API), and the defaults retain
+    // 1000 jobs / 1000 stages / 100k tasks / 1000 SQL executions WITH
+    // full plan-graph strings. Over ~300 query executions (cold + 3 warm
+    // passes x 76 queries) that is GBs of driver-heap churn taxing every
+    // later query's GC — measured ~2x inflation on the queries that run
+    // late in the pass. Trim retention to a working set.
+    val spark = SparkEntry.localSession(
+      "spark.ui.retainedJobs" -> "50",
+      "spark.ui.retainedStages" -> "50",
+      "spark.ui.retainedTasks" -> "500",
+      "spark.sql.ui.retainedExecutions" -> "5",
+      "spark.appStatusStore.asyncTracking.enable" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     // warmup: scan + shuffle + codegen path
     spark.range(2000000L).selectExpr("sum(id)", "count(distinct id % 7)").collect()

@@ -20,4 +20,28 @@ object SparkEntry {
       operators.TextPipeline.oracleSql ++ operators.Similarity.oracleSql ++
       operators.Multimodal.oracleSql ++ operators.Events.oracleSql ++
       operators.Curation.oracleSql
+
+  /** The one local session the mains Bench, Verify and PlanDump run
+    * on: `local[$SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
+    * partitions, UTC, the UI off, graft's session extensions and a
+    * generated-class cache sized to the workload. `extra` settings go on
+    * top.
+    *
+    * The cache (a static conf) defaults to 100 entries; ~116 queries x 4
+    * passes, each with dozens of codegen units, would make every pass
+    * EVICT every other query's classes and Janino recompile the whole
+    * workload — measured 2x inflation on the checkpoint-heavy dedup family
+    * against a focused run whose units fit (r18 A/B). This is compiled
+    * CODE reuse across passes, never data or results.
+    */
+  def localSession(extra: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    (Seq("spark.sql.shuffle.partitions" -> cpus, "spark.sql.session.timeZone" -> "UTC",
+        "spark.ui.enabled" -> "false", "spark.sql.extensions" -> "graft.sql.GraftExtensions",
+        "spark.sql.codegen.cache.maxEntries" -> "10000") ++ extra)
+      .foldLeft(SparkSession.builder().master(s"local[$cpus]")) { case (b, (k, v)) =>
+        b.config(k, v)
+      }
+      .getOrCreate()
+  }
 }

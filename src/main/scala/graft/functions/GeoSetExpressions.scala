@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
-import org.locationtech.jts.geom.{Envelope, Geometry}
+import org.locationtech.jts.geom.Envelope
 
 /** Set-theoretic / constructive geometry operations (the remainder of the
   * ST_ surface a Sedona-class library provides on top of the reference's

@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, WriteBui
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.spatial.{GeoTable, Snapshots, TableSchema, Transforms}
+import graft.spatial.{GeoTable, Snapshots, TableOps, TableSchema, Transforms}
 
 /** Path-backed `TableCatalog`: `SET spark.sql.catalog.graft = …GraftCatalog`
   * (+ `…graft.warehouse = /data`) makes every graft table addressable as
@@ -349,7 +349,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
     // (`id_bucket`, `ts_year`) never enter the logical schema — they live
     // in directory names, written by the append path and used for
     // planning-time projection pruning by GraftFileIndex's pruneSchema.
-    try Snapshots.commitCreate(p.toString,
+    try TableOps.commitCreate(p.toString,
       _ => GeoTable.manifestJson(Nil, Nil, specs.map(_.spec), props = props,
         schema = Some(schema)), failIfExists = true)
     catch { case _: Snapshots.TableCreateConflictException =>
@@ -491,7 +491,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
     // staging main and publish an empty table while abort deletes the only
     // copy of the rows. The staging dir is already the isolation boundary;
     // the withheld props re-attach at commit (commitStagedChanges).
-    Snapshots.commitCreate(tmp.toString,
+    TableOps.commitCreate(tmp.toString,
       _ => GeoTable.manifestJson(Nil, Nil, specs.map(_.spec),
         props = props - "write.wap.enabled",
         schema = Some(schema)))
@@ -709,7 +709,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
 /** An in-flight atomic CTAS / REPLACE: a real graft table in a hidden
   * sibling dir. `commitStagedChanges` moves the staged data files (names
   * are UUID-unique — no collisions) into the target dir and publishes one
-  * snapshot: `commitCreate` for a new table, [[Snapshots.commitReplace]]
+  * snapshot: `TableOps.commitCreate` for a new table, [[Snapshots.commitReplace]]
   * (full-replacement CAS, history retained) for REPLACE. Until that
   * commit the target table is untouched; abort deletes the staged dir.
   */
@@ -792,7 +792,7 @@ class StagedGraftTable(ident: Identifier, finalPath: String, tmpPath: String,
       }
       resetSidecars()
     } else {
-      try Snapshots.commitCreate(finalPath,
+      try TableOps.commitCreate(finalPath,
         v => GeoTable.manifestJson(entries.map(_.copy(addedV = v)), Nil, parts,
           props = finalProps, schema = Some(schema)), failIfExists = true)
       catch { case _: Snapshots.TableCreateConflictException =>

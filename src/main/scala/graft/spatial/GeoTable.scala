@@ -214,7 +214,7 @@ object GeoTable {
     val sch = schema.orElse(
       try Some(spark.read.parquet(path).schema) catch { case _: Exception => None })
     // creation commits through the same refs-CAS point as every other op
-    Snapshots.commitCreate(path,
+    TableOps.commitCreate(path,
       v => manifestJson(stats.map(_.withAddedV(v)), Nil, partitionCols, schema = sch))
   }
 

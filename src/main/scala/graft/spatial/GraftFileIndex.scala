@@ -3,11 +3,9 @@ package graft.spatial
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Expression}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Manifest-driven [[FileIndex]]: file-level skipping from per-file min/max
   * stats, evaluated inclusively by [[FileStats.mightMatch]], combined with

@@ -337,17 +337,14 @@ object IcebergImport {
       }
       val posNames = rewritePos(pos)
       val eqSpecs = rewriteEq(eqs)
-      v = Snapshots.withCommitRetry() {
-        Snapshots.publish(target, Snapshots.refsState(target), entries,
-          posDeletes = posNames, eqDeletes = eqSpecs,
+      // the FIRST graft version pins past every carried stamp
+      v = TableOps.commit(target, minVersion = if (i == 0) maxRank + 1 else 0) { h =>
+        Some(h.copy(m = h.m.copy(files = entries, deletes = Nil, posDeletes = posNames,
+            eqDeletes = eqSpecs, partitions = dirServed.map(_.name), schema = Some(physicalSchema)),
           props = Map(
             "graft.imported-from" -> metaFile.toString,
             "iceberg.table-uuid" -> meta.tableUuid,
-            "iceberg.snapshot-id" -> sid.toString),
-          schema = Some(physicalSchema),
-          partsOverride = dirServed.map(_.name),
-          // the FIRST graft version pins past every carried stamp
-          minVersion = if (i == 0) maxRank + 1 else 0)
+            "iceberg.snapshot-id" -> sid.toString)))
       }
       vMap += sid -> v
     }
@@ -690,7 +687,7 @@ object IcebergImport {
     * defaults handle both versions in one pass.)
     */
   private def readManifests(manifestList: String,
-      read: String => Seq[GenericRecord] = readAvro)
+      read: String => Seq[GenericRecord])
       : (Seq[DataEntry], Seq[DeleteEntry], Seq[DeleteEntry]) = {
     val data = Seq.newBuilder[DataEntry]
     val pos = Seq.newBuilder[DeleteEntry]

@@ -25,6 +25,7 @@ import org.apache.spark.sql.functions._
   * readable until a retention sweep (`expireSnapshots`).
   */
 object Snapshots {
+  import TableOps.{Head, RefsState, commit, refsState, refsVPath, updateRefs}
 
   /** A concurrent writer committed the version this writer computed —
     * re-read the table state and retry the operation.
@@ -207,68 +208,8 @@ object Snapshots {
   // the reference's branch/tag surface (`SnapshotRef` + branch DDL in
   // /root/reference). `main` is an implicit branch that every main-line
   // commit moves. Version numbers stay global — a branch commit allocates
-  // the next number but only moves its own ref.
-  //
-  // The refs pointer is VERSIONED and compare-and-swapped: state K lives in
-  // `_graft_refs_v{K}.json`, and a transition writes `_graft_refs_v{K+1}
-  // .json` with create-if-absent semantics (atomic hard-link publish). The
-  // CAS is the SINGLE commit point of the table — a writer whose refs state
-  // went stale anywhere between its state read and its CAS gets a
-  // CommitConflictException, never a silent lost update. Because the CAS is
-  // a filesystem primitive it also holds ACROSS processes (two driver JVMs
-  // cannot both win the same transition), which a JVM lock cannot give.
-
-  private def refsPath(path: String) = Paths.get(path, "_graft_refs.json") // legacy (read-only)
-  private def refsVPath(path: String, k: Int) = Paths.get(path, s"_graft_refs_v$k.json")
-
-  /** Immutable view of the refs pointer: CAS generation `gen` plus the
-    * branch/tag maps it held. Every commit validates against `gen`.
-    */
-  private[graft] case class RefsState(gen: Int, branches: Map[String, Int],
-      tags: Map[String, Int]) {
-    /** Head of `main` under this state (legacy refs-less tables fall back
-      * to the newest version file, which for them is always committed).
-      */
-    def mainHead(path: String): Int = branches.getOrElse("main", currentVersion(path))
-  }
-
-  private def parseRefs(txt: String): (Map[String, Int], Map[String, Int]) = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val j = JsonMethods.parse(txt)
-    def m(field: String): Map[String, Int] = (j \ field) match {
-      case JObject(kv) => kv.collect { case (k, JInt(v)) => k -> v.toInt }.toMap
-      case _ => Map.empty
-    }
-    (m("branches"), m("tags"))
-  }
-
-  /** Current refs state: newest `_graft_refs_v{K}` file, falling back to a
-    * legacy unversioned `_graft_refs.json` (gen 0 — the first CAS upgrades
-    * it), then to empty for refs-less tables.
-    */
-  private[graft] def refsState(path: String): RefsState = {
-    refsReads.incrementAndGet()
-    val dir = Paths.get(path)
-    var max = 0
-    if (Files.isDirectory(dir)) {
-      max = listDir(dir)(_.foldLeft(0) { (m, p) =>
-        val n = p.getFileName.toString
-        if (n.startsWith("_graft_refs_v") && n.endsWith(".json"))
-          math.max(m, n.stripPrefix("_graft_refs_v").stripSuffix(".json").toInt)
-        else m
-      })
-    }
-    if (max > 0) {
-      val (bs, ts) = parseRefs(new String(Files.readAllBytes(refsVPath(path, max)),
-        StandardCharsets.UTF_8))
-      RefsState(max, bs, ts)
-    } else if (Files.exists(refsPath(path))) {
-      val (bs, ts) = parseRefs(new String(Files.readAllBytes(refsPath(path)),
-        StandardCharsets.UTF_8))
-      RefsState(0, bs, ts)
-    } else RefsState(0, Map.empty, Map.empty)
-  }
+  // the next number but only moves its own ref. The versioned refs pointer
+  // and its CAS live in [[TableOps]].
 
   /** Refs-state reads (each one lists the table directory) — the metadata
     * cost one planning pass pays to find main's head.
@@ -280,46 +221,6 @@ object Snapshots {
     val rs = refsState(path)
     (rs.branches, rs.tags)
   }
-
-  /** Compare-and-swap the refs pointer from generation `expectGen` to
-    * `expectGen + 1`. The new state is staged to a temp file and published
-    * by hard-link creation — atomic, full-content, and FAILS if the target
-    * generation already exists (unlike rename, which silently replaces).
-    * Exactly one contender wins a given transition, in- or cross-process.
-    */
-  private def casRefs(path: String, expectGen: Int, branches: Map[String, Int],
-      tags: Map[String, Int]): Unit = {
-    def obj(m: Map[String, Int]) = m.toSeq.sorted
-      .map { case (k, v) => "\"" + k.replace("\"", "\\\"") + "\":" + v }
-      .mkString("{", ",", "}")
-    val body = s"""{"branches":${obj(branches)},"tags":${obj(tags)}}"""
-      .getBytes(StandardCharsets.UTF_8)
-    val target = refsVPath(path, expectGen + 1)
-    val tmp = Files.createTempFile(target.getParent, ".tmp_refs_", ".json")
-    try {
-      Files.write(tmp, body)
-      try Files.createLink(target, tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new CommitConflictException(
-            s"refs generation ${expectGen + 1} at $path was committed concurrently; " +
-              "re-read and retry")
-      }
-    } finally Files.deleteIfExists(tmp)
-    // generations are immutable once superseded; keep a window for readers
-    // mid-listing and let expireSnapshots remove the rest
-    ((expectGen - 16) to (expectGen - 8)).filter(_ > 0)
-      .foreach(k => Files.deleteIfExists(refsVPath(path, k)))
-  }
-
-  /** Apply a refs-only transition (branch/tag surgery) under the CAS. */
-  private def updateRefs(path: String)(
-      f: RefsState => (Map[String, Int], Map[String, Int])): Unit =
-    withCommitRetry() {
-      val rs = refsState(path)
-      val (bs, ts) = f(rs)
-      casRefs(path, rs.gen, bs, ts)
-    }
 
   private[graft] def atomicReplace(target: java.nio.file.Path, body: Array[Byte]): Unit = {
     val tmp = Files.createTempFile(target.getParent, ".tmp_", target.getFileName.toString)
@@ -427,68 +328,17 @@ object Snapshots {
     val spark = df.sparkSession
     val (added, written) = writeBack(df, path, writeOptions)
     val stats = statsFor(spark, path, added)
-    withCommitRetry() {
-      val rs = refsState(path)
-      if (rs.tags.contains(branch))
-        throw new IllegalArgumentException(s"cannot append to tag: $branch (tags are immutable)")
-      val headV = rs.branches.getOrElse(branch,
-        throw new IllegalArgumentException(s"no such branch: $branch"))
-      publish(path, rs, readManifest(path, Some(headV)) ++ stats,
-        readDeletes(path, Some(headV)), readPosDeletes(path, Some(headV)),
-        readProps(path, Some(headV)) ++ props, ref = branch,
-        eqDeletes = readEqDeletes(path, Some(headV)),
-        schema = mergeSchema(readSchema(path, Some(headV)), written))
-    }
+    commit(path, branch)(appended(_, stats, written, props))
   }
 
-  /** Write a version file with create-if-absent semantics (atomic
-    * hard-link publish — full content or nothing, never torn). Under the
-    * refs-CAS commit protocol this is NAME ALLOCATION, not the commit
-    * point: [[publish]] treats a collision as "number taken, bump and
-    * retry the write". Direct callers still get the conflict exception.
+  /** `h` with `stats` appended, `props` merged and the schema widened to
+    * what was `written` — every append-shaped commit's body.
     */
-  private[graft] def atomicWriteManifest(path: String, v: Int, body: Array[Byte]): Unit = {
-    val target = manifestPath(path, v)
-    val tmp = Files.createTempFile(target.getParent, ".tmp_manifest_", ".json")
-    try {
-      Files.write(tmp, body)
-      try Files.createLink(target, tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new Snapshots.CommitConflictException(
-            s"snapshot v$v at $path was committed concurrently; re-read and retry")
-      }
-    } finally Files.deleteIfExists(tmp)
-  }
+  private def appended(h: Head, stats: Seq[FileStats],
+      written: org.apache.spark.sql.types.StructType, props: Map[String, String]): Option[Head] =
+    Some(h.copy(m = h.m.copy(files = h.m.files ++ stats, schema = mergeSchema(h.m.schema, written)),
+      props = h.props ++ props))
 
-  /** Retry a commit body on CommitConflictException. The body MUST re-read
-    * table state each attempt (base version, manifest, delete lists) so a
-    * retry commits on top of the concurrent winner.
-    */
-  private[graft] def withCommitRetry[T](attempts: Int = 5)(op: => T): T = {
-    var i = 0
-    var last: CommitConflictException = null
-    while (i < attempts) {
-      try return op
-      catch { case e: CommitConflictException => last = e; i += 1 }
-    }
-    throw last
-  }
-
-  /** Commit a new snapshot on top of the refs state `rs` the caller's
-    * prior state was READ from. The commit point is the refs CAS
-    * (`rs.gen → rs.gen + 1`): ANY concurrent commit that interleaved after
-    * the caller's state read — a version file landing, a ref moving, in
-    * this process or another — raises CommitConflictException instead of
-    * silently resurrecting rewritten rows, dropping delete predicates, or
-    * losing a concurrent append (the round-3 judge-confirmed race: base
-    * was taken from the newest version FILE while prior state came from
-    * the refs POINTER, two reads a concurrent publish could interleave).
-    * The version file itself is only name allocation — a failed CAS
-    * deletes it and the caller retries against the new state. New file
-    * entries are stamped with the committed version (their sequence
-    * number); new eq-delete entries likewise.
-    */
   /** Per-snapshot operation stamp (the reference's snapshot `operation`
     * field, `core/.../SnapshotSummary`): set by commits whose shape is not
     * derivable from the manifest diff alone — today only `replace`
@@ -498,103 +348,6 @@ object Snapshots {
     * restate it, so it never leaks onto later snapshots via prop carry.
     */
   private[graft] val OperationProp = "graft.snapshot.operation"
-
-  private[graft] def publish(path: String, rs: RefsState, entries: Seq[FileStats],
-      deletes: Seq[String] = Nil, posDeletes: Seq[String] = Nil,
-      props: Map[String, String] = null, ref: String = "main",
-      eqDeletes: Seq[EqDelete] = Nil,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      partsOverride: Seq[String] = null,
-      partHistoryOverride: Seq[String] = null,
-      minVersion: Int = 0,
-      operation: String = null): Int = {
-    val refHead = rs.branches.getOrElse(ref, if (ref == "main") rs.mainHead(path) else 0)
-    // partitioning is table-level: carry main's spec and history forward
-    // from the head `rs` names, so a concurrent evolution fails the CAS
-    // below instead of being reverted; props and schema carry forward
-    // (from the ref's OWN head) unless replaced. SPEC strings, not derived
-    // names: `bucket(4,id)` must survive or projection pruning degrades
-    lazy val main = headManifest(path, rs)
-    val parts = Option(partsOverride).getOrElse(main.map(_.partitions).getOrElse(Nil))
-    val partHist = Option(partHistoryOverride)
-      .getOrElse(main.map(_.partitionHistory).getOrElse(Nil))
-    val carriedProps =
-      if (props != null) props
-      else if (refHead > 0) readProps(path, Some(refHead))
-      else Map.empty[String, String]
-    // stamp the commit's PARENT (per-ref ancestry, Iceberg's
-    // parent-snapshot-id): version numbers interleave across refs, so a
-    // numeric walk would mix another ref's commits into this ref's history
-    val stamped = (carriedProps - OperationProp) +
-      ("graft.parentVersion" -> refHead.toString) ++
-      Option(operation).map(OperationProp -> _)
-    val sch = schema.orElse(if (refHead > 0) readSchema(path, Some(refHead)) else None)
-    commitManifest(path, rs, ref, v =>
-      GeoTable.manifestJson(entries.map(_.withAddedV(v)), deletes, parts,
-        posDeletes, stamped, eqDeletes.map(_.withSeq(v)), sch, partHist),
-      minVersion = minVersion)
-  }
-
-  /** Allocate the next free version, write `mkBody(v)` as its manifest,
-    * and CAS ref `ref` onto it — shared by [[publish]] and the creation
-    * path ([[GeoTable.writeManifest]]), so EVERY snapshot goes through the
-    * one commit point.
-    */
-  private[spatial] def commitManifest(path: String, rs: RefsState, ref: String,
-      mkBody: Int => String, minVersion: Int = 0): Int = {
-    // legacy-main fallback must be read BEFORE our version file lands
-    val legacyMain = rs.mainHead(path)
-    // allocate the next free version number; a collision here is another
-    // in-flight writer's allocation, not a conflict — bump and re-stamp.
-    // `minVersion` floors the allocation (snapshotClone: the clone's first
-    // version must be >= every carried addedV/seq stamp or sequence-number
-    // scoping inverts on the clone)
-    var v = math.max(math.max(currentVersion(path), rs.branches.getOrElse(ref, 0)),
-      minVersion - 1) + 1
-    var placed = false
-    while (!placed) {
-      val body = mkBody(v).getBytes(StandardCharsets.UTF_8)
-      try { atomicWriteManifest(path, v, body); placed = true }
-      catch { case _: CommitConflictException => v += 1 }
-    }
-    // THE commit: CAS the refs pointer. Losing the CAS abandons the
-    // allocated version file (deleted below) and retries from fresh state,
-    // so committed version numbers may have gaps under contention — like
-    // Iceberg snapshot ids, density is not a commit invariant. `main` is
-    // pinned on first contact with a legacy refs-less table so a side
-    // branch allocating a higher number cannot float main to the max.
-    val pinned = if (rs.branches.contains("main")) rs.branches
-      else rs.branches + ("main" -> (if (ref == "main") v else legacyMain))
-    try casRefs(path, rs.gen, pinned + (ref -> v), rs.tags)
-    catch {
-      case e: CommitConflictException =>
-        Files.deleteIfExists(manifestPath(path, v))
-        throw e
-    }
-    v
-  }
-
-  /** Creation-path commit: retry loop around [[commitManifest]] with fresh
-    * refs state each attempt. `failIfExists` re-checks INSIDE the retry
-    * that no main head exists yet — two racing CREATE TABLEs both pass the
-    * catalog's tableExists pre-check, and without this the loser's retry
-    * would silently commit an empty v2 over the winner's table.
-    */
-  private[graft] def commitCreate(path: String, mkBody: Int => String,
-      failIfExists: Boolean = false): Int =
-    withCommitRetry() {
-      val rs = refsState(path)
-      if (failIfExists && rs.mainHead(path) > 0)
-        throw new TableCreateConflictException(path)
-      commitManifest(path, rs, "main", mkBody)
-    }
-
-  /** Pending MoR deletes of snapshot `head` (carried forward by ops; 0 =
-    * empty table). Ops read ALL prior state at the head their refs state
-    * names, so the commit CAS validates exactly what was merged.
-    */
-  private def carried(path: String, head: Int): Seq[String] =
-    if (head > 0) readDeletes(path, Some(head)) else Nil
 
   /** Pending MoR predicate-delete SQL across EVERY ref head (branches,
     * tags, and main) — the schema-evolution guard's input: a pending
@@ -608,28 +361,14 @@ object Snapshots {
       .flatMap(h => readDeletes(path, Some(h))).distinct
   }
 
-  /** Pending positional delete files of snapshot `head`. Stale entries
-    * naming files no longer in the manifest are harmless (those files are
-    * never read), so CoW ops carry the list as-is.
-    */
-  private def carriedPos(path: String, head: Int): Seq[String] =
-    if (head > 0) readPosDeletes(path, Some(head)) else Nil
-
-  private def carriedEq(path: String, head: Int): Seq[EqDelete] =
-    if (head > 0) readEqDeletes(path, Some(head)) else Nil
-
   /** Commit a metadata-only snapshot replacing the table property map with
     * `(current ++ set) -- unset` — ALTER TABLE SET/UNSET TBLPROPERTIES.
     * Files, deletes, and schema carry forward untouched.
     */
   def updateProperties(path: String, set: Map[String, String],
-      unset: Seq[String] = Nil): Int = withCommitRetry() {
-    val rs = refsState(path)
-    val head = rs.mainHead(path)
-    val merged = (readProps(path, Some(head)) ++ set) -- unset
-    publish(path, rs, if (head > 0) readManifest(path, Some(head)) else Nil,
-      carried(path, head), carriedPos(path, head), props = merged,
-      eqDeletes = carriedEq(path, head))
+      unset: Seq[String] = Nil): Int = commit(path) { h =>
+    require(h.v > 0, s"no snapshots at $path")
+    Some(h.copy(props = (h.props ++ set) -- unset))
   }
 
   // ---- table statistics (NDV): one approx_count_distinct pass over the
@@ -689,7 +428,7 @@ object Snapshots {
 
   private def writeSketches(path: String, v: Int, sketches: Map[String, Array[Byte]],
       scannedFiles: Int, scannedRows: Long, mode: String,
-      ndvs: Map[String, Long] = Map.empty): Unit = {
+      ndvs: Map[String, Long]): Unit = {
     val cols = sketches.toSeq.sortBy(_._1).map { case (c, b) =>
       s""""$c":"${java.util.Base64.getEncoder.encodeToString(b)}""""
     }.mkString("{", ",", "}")
@@ -929,12 +668,8 @@ object Snapshots {
     * commit); no-op if a schema is already present or the table is empty.
     */
   private[spatial] def backfillSchema(path: String,
-      schema: org.apache.spark.sql.types.StructType): Int = withCommitRetry() {
-    val rs = refsState(path)
-    val head = rs.mainHead(path)
-    if (head == 0 || readSchema(path, Some(head)).isDefined) head
-    else publish(path, rs, readManifest(path, Some(head)), carried(path, head),
-      carriedPos(path, head), eqDeletes = carriedEq(path, head), schema = Some(schema))
+      schema: org.apache.spark.sql.types.StructType): Int = commit(path) { h =>
+    if (h.v == 0 || h.m.schema.isDefined) None else h.edit(_.copy(schema = Some(schema)))
   }
 
   /** Commit a staged full replacement (atomic `REPLACE TABLE … AS SELECT`,
@@ -946,10 +681,8 @@ object Snapshots {
     */
   def commitReplace(spark: SparkSession, path: String, entries: Seq[FileStats],
       schema: org.apache.spark.sql.types.StructType, parts: Seq[String],
-      props: Map[String, String]): Int = withCommitRetry() {
-    val rs = refsState(path)
-    publish(path, rs, entries, props = props, schema = Some(schema),
-      partsOverride = parts, partHistoryOverride = Nil)
+      props: Map[String, String]): Int = commit(path) { _ =>
+    Some(Head(0, GeoTable.Manifest(entries, Nil, Nil, Nil, parts, Nil, Some(schema)), props))
   }
 
   /** Partition-spec evolution: `ALTER TABLE … ADD/DROP PARTITION FIELD`
@@ -969,11 +702,9 @@ object Snapshots {
     * semantics would poison projection pruning.
     */
   def evolvePartitionSpec(path: String, add: Seq[String] = Nil,
-      drop: Seq[String] = Nil): Int = withCommitRetry() {
-    val rs = refsState(path)
-    val head = rs.mainHead(path)
-    require(head > 0, s"no table at $path")
-    val m = manifest(path, Some(head))
+      drop: Seq[String] = Nil): Int = commit(path) { h =>
+    require(h.v > 0, s"no table at $path")
+    val m = h.m
     val current = m.specs
     val history = m.partitionHistory
     val schema = m.schema
@@ -1035,9 +766,7 @@ object Snapshots {
       s"DROP PARTITION FIELD ${t.spec}: identity partitioning cannot be evolved"))
     val newParts = kept ++ adds
     val newHistory = (history ++ dropped.map(_.spec)).distinct
-    publish(path, rs, readManifest(path, Some(head)), carried(path, head),
-      carriedPos(path, head), eqDeletes = carriedEq(path, head),
-      partsOverride = newParts.map(_.spec), partHistoryOverride = newHistory)
+    h.edit(_.copy(partitions = newParts.map(_.spec), partitionHistory = newHistory))
   }
 
   /** Commit one streaming epoch's staged files exactly once (the DSv2
@@ -1055,35 +784,35 @@ object Snapshots {
     */
   def commitStreamEpoch(spark: SparkSession, path: String, token: String,
       epochId: Long, files: Seq[String], overwrite: Boolean = false,
-      extraProps: Map[String, String] = Map.empty): Int = withCommitRetry() {
+      extraProps: Map[String, String] = Map.empty): Int = {
     // same posture as every other main-ref write: a WAP session stages
     // onto its audit branch, and a streaming epoch cannot — committing
     // to main mid-audit would land unaudited rows there silently
     rejectUnderWap(path, "a streaming epoch commit")
     val key = s"stream.$token.lastCommittedBatchId"
-    val rs = refsState(path)
-    val head = rs.mainHead(path)
-    val props = if (head > 0) readProps(path, Some(head)) else Map.empty[String, String]
-    if (epochId <= props.get(key).map(_.toLong).getOrElse(-1L)) {
-      files.foreach(f => Files.deleteIfExists(Paths.get(path, f)))
-      head
-    } else if (files.isEmpty && !overwrite) {
-      head // empty epoch: nothing to register, no metadata churn
-    } else if (overwrite) {
-      // complete-mode epoch (the reference's `asStreamingOverwrite`,
-      // SparkWrite.java:181-186): the epoch's files REPLACE the table —
-      // delete state clears with the rows it applied to; the high-water
-      // mark still advances in the same snapshot (replay-safe)
-      publish(path, rs, statsFor(spark, path, files),
-        props = props + (key -> epochId.toString) ++ extraProps)
-    } else {
-      val prior = if (head > 0) readManifest(path, Some(head)) else Nil
-      publish(path, rs, prior ++ statsFor(spark, path, files),
-        carried(path, head), carriedPos(path, head),
-        props = props + (key -> epochId.toString) ++ extraProps,
-        eqDeletes = carriedEq(path, head))
+    commit(path) { h =>
+      if (epochId <= h.props.get(key).map(_.toLong).getOrElse(-1L)) {
+        files.foreach(f => Files.deleteIfExists(Paths.get(path, f)))
+        None
+      } else if (files.isEmpty && !overwrite) {
+        None // empty epoch: nothing to register, no metadata churn
+      } else {
+        val stats = statsFor(spark, path, files)
+        // complete-mode epoch (the reference's `asStreamingOverwrite`,
+        // SparkWrite.java:181-186): the epoch's files REPLACE the table —
+        // delete state clears with the rows it applied to; the high-water
+        // mark still advances in the same snapshot (replay-safe)
+        val m = if (overwrite) cleared(h.m, stats) else h.m.copy(files = h.m.files ++ stats)
+        Some(h.copy(m = m, props = h.props + (key -> epochId.toString) ++ extraProps))
+      }
     }
   }
+
+  /** `m` with `files` as its whole file list and no delete state — the
+    * manifest of a commit that replaces every row.
+    */
+  private def cleared(m: GeoTable.Manifest, files: Seq[FileStats]): GeoTable.Manifest =
+    m.copy(files = files, deletes = Nil, posDeletes = Nil, eqDeletes = Nil)
 
   private def listDataFiles(spark: SparkSession, path: String): Set[String] =
     GeoTable.dataFileNames(spark, path).toSet
@@ -1121,10 +850,10 @@ object Snapshots {
     * [[validateOverwriteConflicts]] precedent), equality deletes through
     * their sequence stamps ([[EqDelete.appliesTo]]).
     */
-  private def morScopedFiles(spark: SparkSession, path: String, head: Int,
+  private def morScopedFiles(spark: SparkSession, path: String, head: GeoTable.Manifest,
       files: Seq[FileStats]): Seq[FileStats] = {
     if (files.isEmpty) return Nil
-    val preds = carried(path, head)
+    val preds = head.deletes
     val predExprs: Seq[Option[org.apache.spark.sql.catalyst.expressions.Expression]] =
       if (preds.isEmpty) Nil
       else {
@@ -1146,12 +875,12 @@ object Snapshots {
                   .create(e.eval(null), e.dataType)
             })).toOption.flatten)
       }
-    val posRel = carriedPos(path, head)
+    val posRel = head.posDeletes
     val posTargets =
       if (posRel.isEmpty) Set.empty[String]
       else spark.read.parquet(posRel.map(f => s"$path/$f"): _*)
         .select(col("file_path")).distinct().collect().map(_.getString(0)).toSet
-    val eqs = carriedEq(path, head)
+    val eqs = head.eqDeletes
     files.filter { f =>
       // a predicate that failed to resolve is None: forall says "might
       // match" — conservative keep, never a resurrected row
@@ -1162,11 +891,11 @@ object Snapshots {
   }
 
   private def readFilesForRewrite(spark: SparkSession, path: String,
-      affected: Seq[FileStats], head: Int): DataFrame =
+      affected: Seq[FileStats], head: GeoTable.Manifest): DataFrame =
     applyEqDeletes(spark, path,
       applyPosDeletes(spark, path,
-        readFilesDecoded(spark, path, affected.map(_.path)), carriedPos(path, head)),
-      carriedEq(path, head), affected)
+        readFilesDecoded(spark, path, affected.map(_.path)), head.posDeletes),
+      head.eqDeletes, affected)
 
   /** Raw read of specific data files with declared encodings decoded to the
     * WKB runtime repr (so user conditions/assignments see the same columns
@@ -1618,61 +1347,24 @@ object Snapshots {
     val (added, written) = writeBack(df, path)
     val stats = statsFor(spark, path, added)
     var committed = false
-    withCommitRetry() {
-      val rs = refsState(path)
-      val head = Some(rs.mainHead(path)).filter(_ > 0)
-      val props = head.map(v => readProps(path, Some(v)))
-        .getOrElse(Map.empty[String, String])
-      if (batchId <= props.get(batchKey).map(_.toLong).getOrElse(-1L)) {
-        added.foreach(f => Files.deleteIfExists(Paths.get(path, f)))
-        committed = false
-        head.getOrElse(0)
-      } else {
-        val prior = head.map(v => readManifest(path, Some(v))).getOrElse(Nil)
-        committed = true
-        publish(path, rs, prior ++ stats,
-          head.map(v => readDeletes(path, Some(v))).getOrElse(Nil),
-          head.map(v => readPosDeletes(path, Some(v))).getOrElse(Nil),
-          props + (batchKey -> batchId.toString),
-          eqDeletes = head.map(v => readEqDeletes(path, Some(v))).getOrElse(Nil),
-          schema = mergeSchema(head.flatMap(v => readSchema(path, Some(v))), written))
-      }
+    commit(path) { h =>
+      committed = batchId > h.props.get(batchKey).map(_.toLong).getOrElse(-1L)
+      if (committed) appended(h, stats, written, Map(batchKey -> batchId.toString))
+      else { added.foreach(f => Files.deleteIfExists(Paths.get(path, f))); None }
     }
     committed
   }
 
   private def appendMain(df: DataFrame, path: String, props: Map[String, String],
-      writeOptions: Map[String, String] = Map.empty): Int = {
+      writeOptions: Map[String, String]): Int = {
     val spark = df.sparkSession
     val (added, written) = writeBack(df, path, writeOptions) // exact attribution, outside retry
     val stats = statsFor(spark, path, added)
     // commit retry is METADATA-ONLY: the data files are already in place,
     // a conflicting concurrent commit just means re-reading the new head
     // and re-merging the manifest
-    withCommitRetry() {
-      val rs = refsState(path)
-      val head = Some(rs.mainHead(path)).filter(_ > 0)
-      val prior = head.map(v => readManifest(path, Some(v))).getOrElse(Nil)
-      val mergedProps =
-        head.map(v => readProps(path, Some(v))).getOrElse(Map.empty[String, String]) ++ props
-      publish(path, rs, prior ++ stats,
-        head.map(v => readDeletes(path, Some(v))).getOrElse(Nil),
-        head.map(v => readPosDeletes(path, Some(v))).getOrElse(Nil),
-        mergedProps,
-        eqDeletes = head.map(v => readEqDeletes(path, Some(v))).getOrElse(Nil),
-        schema = mergeSchema(head.flatMap(v => readSchema(path, Some(v))), written))
-    }
+    commit(path)(appended(_, stats, written, props))
   }
-
-  /** Table props of `head` (empty for a fresh table) merged with a
-    * commit's `snapshot-property.*` extras — every overwrite-family commit
-    * applies this, mirroring the reference's SparkWrite applying
-    * `extraSnapshotMetadata` to EVERY operation, not only appends.
-    */
-  private def propsWithExtras(path: String, head: Int,
-      extras: Map[String, String]): Map[String, String] =
-    if (extras.isEmpty) null // null = publish carries the head's props
-    else (if (head > 0) readProps(path, Some(head)) else Map.empty[String, String]) ++ extras
 
   /** Logical overwrite: new snapshot references only the new files. */
   def overwrite(df: DataFrame, path: String,
@@ -1683,15 +1375,16 @@ object Snapshots {
     val spark = df.sparkSession
     val (added, written) = writeBack(df, path, writeOptions)
     val stats = statsFor(spark, path, added)
-    withCommitRetry() {
-      val rs = refsState(path)
+    commit(path) { h =>
       // truncate scope = the whole table: every concurrent change conflicts
       validate.foreach { case (fromV, level) =>
-        validateOverwriteConflicts(spark, path, fromV, rs.mainHead(path), level,
-          None, None) }
-      // logical overwrite clears deletes and resets the schema
-      publish(path, rs, stats, schema = Some(written),
-        props = propsWithExtras(path, rs.mainHead(path), extraProps))
+        validateOverwriteConflicts(spark, path, fromV, h.v, level, None, None) }
+      // logical overwrite clears deletes and resets the schema; the
+      // commit's `snapshot-property.*` extras apply to every overwrite-
+      // family commit, as the reference's SparkWrite applies
+      // `extraSnapshotMetadata` to EVERY operation, not only appends
+      Some(h.copy(m = cleared(h.m, stats).copy(schema = Some(written)),
+        props = h.props ++ extraProps))
     }
   }
 
@@ -1789,16 +1482,11 @@ object Snapshots {
     if (added.isEmpty) return mainVersion(path) // nothing incoming: no-op
     val stats = statsFor(spark, path, added)
     val touched = added.map(partDir).toSet
-    withCommitRetry() {
-      val rs = refsState(path)
-      val head = rs.mainHead(path)
+    commit(path) { h =>
       validate.foreach { case (fromV, level) =>
-        validateOverwriteConflicts(spark, path, fromV, head, level, None, Some(touched)) }
-      val prior = if (head > 0) readManifest(path, Some(head)) else Nil
-      val kept = prior.filterNot(e => touched(partDir(e.path)))
-      publish(path, rs, kept ++ stats, carried(path, head), carriedPos(path, head),
-        props = propsWithExtras(path, head, extraProps),
-        eqDeletes = carriedEq(path, head))
+        validateOverwriteConflicts(spark, path, fromV, h.v, level, None, Some(touched)) }
+      val kept = h.m.files.filterNot(e => touched(partDir(e.path)))
+      Some(h.copy(m = h.m.copy(files = kept ++ stats), props = h.props ++ extraProps))
     }
   }
 
@@ -1828,20 +1516,19 @@ object Snapshots {
     val spark = df.sparkSession
     val (added, written) = writeBack(df, path, writeOptions)
     val stats = statsFor(spark, path, added)
-    withCommitRetry() {
-      val rs = refsState(path)
-      val head = rs.mainHead(path)
+    commit(path) { h =>
+      val head = h.v
       validate.foreach { case (fromV, level) =>
         val condExpr = read(spark, path, Some(head)).filter(cond)
           .queryExecution.optimizedPlan
           .collectFirst { case Filter(c, _) => c }
         validateOverwriteConflicts(spark, path, fromV, head, level, condExpr, None)
       }
-      if (head == 0) publish(path, rs, stats, schema = Some(written),
-        props = propsWithExtras(path, head, extraProps))
+      if (head == 0)
+        Some(h.copy(m = h.m.copy(files = stats, schema = Some(written)), props = extraProps))
       else {
-        val current = readManifest(path, Some(head))
-        val identCols = manifest(path, Some(head)).specs
+        val current = h.m.files
+        val identCols = h.m.specs
           .collect { case Transforms.Identity(c) => c }.toSet
         val atomic = filters.flatMap(flattenAnd)
         // identity-partition attribute of an exactly-evaluable conjunct
@@ -1880,15 +1567,13 @@ object Snapshots {
         val rewritten =
           if (affected.isEmpty) Nil
           else {
-            val survivors = readFilesForRewrite(spark, path, affected, head)
+            val survivors = readFilesForRewrite(spark, path, affected, h.m)
               .filter(!coalesce(cond, lit(false)))
             writeBack(survivors, path)._1
           }
-        publish(path, rs,
-          kept ++ untouched ++ liveStatsFor(spark, path, rewritten) ++ stats,
-          carried(path, head), carriedPos(path, head),
-          props = propsWithExtras(path, head, extraProps),
-          eqDeletes = carriedEq(path, head))
+        Some(h.copy(m = h.m.copy(
+          files = kept ++ untouched ++ liveStatsFor(spark, path, rewritten) ++ stats),
+          props = h.props ++ extraProps))
       }
     }
   }
@@ -1904,12 +1589,7 @@ object Snapshots {
     rejectUnderWap(path, "a merge-on-read predicate delete")
     // fail fast on unparseable/unresolvable predicates
     read(spark, path).filter(!coalesce(expr(condSql), lit(false))).queryExecution.analyzed
-    withCommitRetry() {
-      val rs = refsState(path)
-      val head = rs.mainHead(path)
-      publish(path, rs, readManifest(path, Some(head)), carried(path, head) :+ condSql,
-        carriedPos(path, head), eqDeletes = carriedEq(path, head))
-    }
+    commit(path)(_.edit(m => m.copy(deletes = m.deletes :+ condSql)))
   }
 
   /** Merge-on-read POSITIONAL delete: record `(file_path, pos)` rows in a
@@ -1924,11 +1604,9 @@ object Snapshots {
     require(positions.columns.toSet == Set("file_path", "pos"),
       s"positions must have columns (file_path, pos), got ${positions.columns.mkString(",")}")
     val (name, _) = writeDeleteFile(positions, path, "posdel")
-    withCommitRetry() {
-      val rs = refsState(path)
-      val head = rs.mainHead(path)
-      publish(path, rs, readManifest(path, Some(head)), carried(path, head),
-        carriedPos(path, head) :+ name, eqDeletes = carriedEq(path, head))
+    commit(path) { h =>
+      require(h.v > 0, s"no snapshots at $path")
+      h.edit(m => m.copy(posDeletes = m.posDeletes :+ name))
     }
   }
 
@@ -1953,16 +1631,11 @@ object Snapshots {
     val entries = TableSchema.read(path)
     val phys = rows.columns.map(c => TableSchema.physicalOf(entries, c))
     val (name, _) = writeDeleteFile(rows.toDF(phys.toIndexedSeq: _*), path, "eqdel")
-    withCommitRetry() {
-      // seq = 0 here; publish stamps it with the committed version, scoping
-      // the delete to data files that already existed (sequence-number
-      // semantics: later appends with matching keys stay visible)
-      val rs = refsState(path)
-      val head = rs.mainHead(path)
-      publish(path, rs, readManifest(path, Some(head)), carried(path, head),
-        carriedPos(path, head),
-        eqDeletes = carriedEq(path, head) :+ EqDelete(name, phys.toSeq))
-    }
+    // seq = 0 here; the commit stamps it with the committed version,
+    // scoping the delete to data files that already existed
+    // (sequence-number semantics: later appends with matching keys stay
+    // visible)
+    commit(path)(_.edit(m => m.copy(eqDeletes = m.eqDeletes :+ EqDelete(name, phys.toSeq))))
   }
 
   /** Write delete rows as a single parquet file under `_graft_deletes/`
@@ -2114,7 +1787,7 @@ object Snapshots {
     * 1=1`, TRUNCATE via deleteWhere) matches every file.
     */
   private def splitByCond(table: DataFrame, cond: Column,
-      current: Seq[FileStats], path: String = null): (Seq[FileStats], Seq[FileStats]) = {
+      current: Seq[FileStats], path: String): (Seq[FileStats], Seq[FileStats]) = {
     val plan = table.filter(cond).queryExecution.optimizedPlan
     plan.collectFirst { case Filter(c, _) => c } match {
       case Some(c) =>
@@ -2169,18 +1842,6 @@ object Snapshots {
     else deleteCoW(spark, path, cond, r)
   }
 
-  /** Writable head of a ref: main's head, or a branch head — never a tag.
-    * Branch-scoped DML (`DELETE FROM cat.db.t.branch_x ...`) computes
-    * against the branch head and publishes onto the branch pointer only
-    * (write-audit-publish; `fast_forward` promotes the delta).
-    */
-  private def refHead(rs: RefsState, path: String, ref: String): Int =
-    if (ref == "main") rs.mainHead(path)
-    else if (rs.tags.contains(ref))
-      throw new IllegalArgumentException(s"cannot write to tag: $ref (tags are immutable)")
-    else rs.branches.getOrElse(ref,
-      throw new IllegalArgumentException(s"no such branch: $ref"))
-
   /** Live rows WITH their `(file, pos)` provenance — the input every
     * position-delta DML needs. `_metadata` only binds directly above the
     * file scan, so provenance materializes FIRST and the snapshot's delete
@@ -2207,18 +1868,13 @@ object Snapshots {
     * pre-check would execute the identical matched-rows scan twice).
     */
   private def deleteMoRPositions(spark: SparkSession, path: String,
-      cond: Column, ref: String = "main"): Int = withCommitRetry() {
-    val rs = refsState(path)
-    val head = refHead(rs, path, ref)
+      cond: Column, ref: String): Int = commit(path, ref) { h =>
     val positions = positionsOf(
-      readWithPositions(spark, path, Some(head)).filter(coalesce(cond, lit(false))))
+      readWithPositions(spark, path, Some(h.v)).filter(coalesce(cond, lit(false))))
     val (name, matchedRows) = writeDeleteFile(positions, path, "posdel")
     if (matchedRows == 0) { // nothing matches: no-op snapshotless
-      Files.deleteIfExists(Paths.get(path, name)); head
-    } else {
-      publish(path, rs, readManifest(path, Some(head)), carried(path, head),
-        carriedPos(path, head) :+ name, ref = ref, eqDeletes = carriedEq(path, head))
-    }
+      Files.deleteIfExists(Paths.get(path, name)); None
+    } else h.edit(m => m.copy(posDeletes = m.posDeletes :+ name))
   }
 
   /** Copy-on-write DELETE: rewrite only files whose stats might match.
@@ -2227,20 +1883,16 @@ object Snapshots {
     * `removeOrphanFiles` — Iceberg's failed-commit debris semantics).
     */
   private def deleteCoW(spark: SparkSession, path: String, cond: Column,
-      ref: String = "main"): Int =
-    withCommitRetry() {
-      val rs = refsState(path)
-      val head = refHead(rs, path, ref)
-      val current = readManifest(path, Some(head))
-      val table = read(spark, path, Some(head))
-      val (affected, untouched) = splitByCond(table, cond, current, path)
-      if (affected.isEmpty) head // nothing can match
+      ref: String): Int =
+    commit(path, ref) { h =>
+      val table = read(spark, path, Some(h.v))
+      val (affected, untouched) = splitByCond(table, cond, h.m.files, path)
+      if (affected.isEmpty) None // nothing can match
       else {
-        val survivors = readFilesForRewrite(spark, path, affected, head)
+        val survivors = readFilesForRewrite(spark, path, affected, h.m)
           .filter(!coalesce(cond, lit(false))) // DELETE keeps rows where cond is false or null
         val (added, _) = writeBack(survivors, path)
-        publish(path, rs, untouched ++ liveStatsFor(spark, path, added), carried(path, head),
-          carriedPos(path, head), ref = ref, eqDeletes = carriedEq(path, head))
+        h.edit(_.copy(files = untouched ++ liveStatsFor(spark, path, added)))
       }
     }
 
@@ -2277,18 +1929,16 @@ object Snapshots {
     }
 
   private def updateMoR(spark: SparkSession, path: String, cond: Column,
-      assignments: Map[String, Column], ref: String = "main"): Int = withCommitRetry() {
-    val rs = refsState(path)
-    val head = refHead(rs, path, ref)
+      assignments: Map[String, Column], ref: String): Int = commit(path, ref) { h =>
     val hit = coalesce(cond, lit(false))
     // the matched frame feeds BOTH the position-delete file and the
     // updated-copy writeback — persist so the (expensive, delete-joined)
     // matched-rows scan runs once, spilling to disk if large
-    val matched = readWithPositions(spark, path, Some(head)).filter(hit)
+    val matched = readWithPositions(spark, path, Some(h.v)).filter(hit)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val (name, matchedRows) = writeDeleteFile(positionsOf(matched), path, "posdel")
-      if (matchedRows == 0) { Files.deleteIfExists(Paths.get(path, name)); head }
+      if (matchedRows == 0) { Files.deleteIfExists(Paths.get(path, name)); None }
       else {
         val updated = assignments.foldLeft(matched.drop("__mor_file", "__mor_pos")) {
           case (df, (c, v)) => applyAssignment(df, c, v, gate = None)
@@ -2301,9 +1951,8 @@ object Snapshots {
           else df
         }
         val (added, _) = writeBack(bboxed, path)
-        publish(path, rs, readManifest(path, Some(head)) ++ statsFor(spark, path, added),
-          carried(path, head), carriedPos(path, head) :+ name, ref = ref,
-          eqDeletes = carriedEq(path, head))
+        h.edit(m => m.copy(files = m.files ++ statsFor(spark, path, added),
+          posDeletes = m.posDeletes :+ name))
       }
     } finally matched.unpersist(blocking = false)
   }
@@ -2313,16 +1962,13 @@ object Snapshots {
     * `SparkCopyOnWriteOperation` shape).
     */
   private def updateCoW(spark: SparkSession, path: String, cond: Column,
-      assignments: Map[String, Column], ref: String = "main"): Int = withCommitRetry() {
-    val rs = refsState(path)
-    val head = refHead(rs, path, ref)
-    val current = readManifest(path, Some(head))
-    val table = read(spark, path, Some(head))
-    val (affected, untouched) = splitByCond(table, cond, current, path)
-    if (affected.isEmpty) head
+      assignments: Map[String, Column], ref: String): Int = commit(path, ref) { h =>
+    val table = read(spark, path, Some(h.v))
+    val (affected, untouched) = splitByCond(table, cond, h.m.files, path)
+    if (affected.isEmpty) None
     else {
       val hit = coalesce(cond, lit(false))
-      val base = readFilesForRewrite(spark, path, affected, head)
+      val base = readFilesForRewrite(spark, path, affected, h.m)
       val rewritten = assignments.foldLeft(base) {
         case (df, (c, v)) => applyAssignment(df, c, v, gate = Some(hit))
       }
@@ -2334,8 +1980,7 @@ object Snapshots {
         else df
       }
       val (added, _) = writeBack(bboxed, path)
-      publish(path, rs, untouched ++ liveStatsFor(spark, path, added), carried(path, head),
-        carriedPos(path, head), ref = ref, eqDeletes = carriedEq(path, head))
+      h.edit(_.copy(files = untouched ++ liveStatsFor(spark, path, added)))
     }
   }
 
@@ -2354,13 +1999,11 @@ object Snapshots {
   }
 
   private def mergeUpsertMoR(spark: SparkSession, path: String, source: DataFrame,
-      keyCol: String, ref: String = "main"): Int = withCommitRetry() {
-    val rs = refsState(path)
-    val head = refHead(rs, path, ref)
-    val table = read(spark, path, Some(head))
+      keyCol: String, ref: String): Int = commit(path, ref) { h =>
+    val table = read(spark, path, Some(h.v))
     val src = source.select(table.columns.map(col): _*)
     val positions = positionsOf(
-      readWithPositions(spark, path, Some(head))
+      readWithPositions(spark, path, Some(h.v))
         .join(src.select(col(keyCol)), Seq(keyCol), "left_semi"))
     // one scan: write the delete file, footer count decides the no-match case
     val (delName, matchedRows) = writeDeleteFile(positions, path, "posdel")
@@ -2374,10 +2017,8 @@ object Snapshots {
       // delete/update paths — never churn a version or register the
       // writer's empty part files
       added.foreach(r => Files.deleteIfExists(Paths.get(path, r)))
-      head
-    } else publish(path, rs, readManifest(path, Some(head)) ++ stats,
-      carried(path, head), carriedPos(path, head) ++ delFile, ref = ref,
-      eqDeletes = carriedEq(path, head))
+      None
+    } else h.edit(m => m.copy(files = m.files ++ stats, posDeletes = m.posDeletes ++ delFile))
   }
 
   /** Copy-on-write MERGE: only target files whose key-range stats overlap
@@ -2385,15 +2026,13 @@ object Snapshots {
     * the reference's MoR/CoW MERGE surface, SURVEY.md §2.7).
     */
   private def mergeUpsertCoW(spark: SparkSession, path: String, source: DataFrame,
-      keyCol: String, ref: String = "main"): Int = withCommitRetry() {
-    val rs = refsState(path)
-    val head = refHead(rs, path, ref)
-    val current = readManifest(path, Some(head))
-    val table = read(spark, path, Some(head))
+      keyCol: String, ref: String): Int = commit(path, ref) { h =>
+    val current = h.m.files
+    val table = read(spark, path, Some(h.v))
     val src = source.select(table.columns.map(col): _*) // align schema/order
     val Array(kMin, kMax) = src.agg(min(col(keyCol)), max(col(keyCol))).collect()
       .flatMap(r => Array(r.get(0), r.get(1)))
-    if (kMin == null) head // empty source
+    if (kMin == null) None // empty source
     else {
       // a file is affected iff its key range overlaps [kMin, kMax]
       val resolved = table.filter(col(keyCol).between(kMin, kMax))
@@ -2405,13 +2044,12 @@ object Snapshots {
       }
       val survivors =
         if (affected.isEmpty) spark.emptyDataFrame.limit(0)
-        else readFilesForRewrite(spark, path, affected, head)
+        else readFilesForRewrite(spark, path, affected, h.m)
           .join(src.select(col(keyCol)), Seq(keyCol), "left_anti")
           .select(table.columns.map(col): _*)
       val out = if (affected.isEmpty) src else survivors.unionByName(src)
       val (added, _) = writeBack(out, path)
-      publish(path, rs, untouched ++ liveStatsFor(spark, path, added), carried(path, head),
-        carriedPos(path, head), ref = ref, eqDeletes = carriedEq(path, head))
+      h.edit(_.copy(files = untouched ++ liveStatsFor(spark, path, added)))
     }
   }
 
@@ -2586,11 +2224,10 @@ object Snapshots {
   private def mergeIntoRef(spark: SparkSession, path: String, source: DataFrame, onSql: String,
       clauses: Seq[MergeClause], targetAlias: String,
       sourceAlias: String, ref: String,
-      catalogIdent: Option[String] = None): Int = withCommitRetry() {
+      catalogIdent: Option[String]): Int = commit(path, ref) { h =>
     require(clauses.nonEmpty, "MERGE needs at least one WHEN clause")
-    val rs = refsState(path)
-    val head = refHead(rs, path, ref)
-    val current = readManifest(path, Some(head))
+    val head = h.v
+    val current = h.m.files
     val table = read(spark, path, Some(head))
     val tableCols = table.columns.toSeq
 
@@ -2622,7 +2259,7 @@ object Snapshots {
       }
 
     val hasInsert = clauses.exists(!_.matched)
-    if (affected.isEmpty && !hasInsert) head
+    if (affected.isEmpty && !hasInsert) None
     else {
       // storage-partitioned MERGE (the reference's
       // TestStoragePartitionedJoinsInRowLevelOperations): when every
@@ -2646,7 +2283,7 @@ object Snapshots {
         spark.read.option("end-version", head)
           .option("__files", affected.map(_.path).mkString(","))
           .table(catalogIdent.get)
-      } else readFilesForRewrite(spark, path, affected, head))
+      } else readFilesForRewrite(spark, path, affected, h.m))
         .withColumn("__t", lit(1))
         .withColumn("__tid", monotonically_increasing_id()).alias(targetAlias)
       val src = source.withColumn("__s", lit(1))
@@ -2658,8 +2295,7 @@ object Snapshots {
       val out = withAction.select(tableCols.map(
         mergeOutputCol(clauses, source, table.schema, targetAlias, sourceAlias)): _*)
       val (added, _) = writeBack(out, path)
-      publish(path, rs, untouched ++ liveStatsFor(spark, path, added), carried(path, head),
-        carriedPos(path, head), ref = ref, eqDeletes = carriedEq(path, head))
+      h.edit(_.copy(files = untouched ++ liveStatsFor(spark, path, added)))
     }
   }
 
@@ -2676,10 +2312,9 @@ object Snapshots {
   private def mergeIntoMoR(spark: SparkSession, path: String, source: DataFrame,
       onSql: String, clauses: Seq[MergeClause], targetAlias: String,
       sourceAlias: String, ref: String,
-      catalogIdent: Option[String] = None): Int = withCommitRetry() {
+      catalogIdent: Option[String]): Int = commit(path, ref) { h =>
     require(clauses.nonEmpty, "MERGE needs at least one WHEN clause")
-    val rs = refsState(path)
-    val head = refHead(rs, path, ref)
+    val head = h.v
     val table = read(spark, path, Some(head))
     val tableCols = table.columns.toSeq
     // storage-partitioned MoR MERGE: the `_file`/`_pos` metadata columns
@@ -2725,10 +2360,8 @@ object Snapshots {
     val (added, _) = writeBack(out, path)
     val (live, empty) = statsFor(spark, path, added).partition(_.rows > 0L)
     empty.foreach(f => Files.deleteIfExists(Paths.get(path, f.path)))
-    if (deletedRows == 0 && live.isEmpty) head // no clause fired: no-op, snapshotless
-    else publish(path, rs, readManifest(path, Some(head)) ++ live,
-      carried(path, head), carriedPos(path, head) ++ delFile, ref = ref,
-      eqDeletes = carriedEq(path, head))
+    if (deletedRows == 0 && live.isEmpty) None // no clause fired: no-op, snapshotless
+    else h.edit(m => m.copy(files = m.files ++ live, posDeletes = m.posDeletes ++ delFile))
   }
 
   /** Pair changelog delete+insert rows sharing the identifier columns
@@ -3348,7 +2981,6 @@ object Snapshots {
   }
 
   def allDeleteFilesTable(spark: SparkSession, path: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val frames = retainedVersions(path).map(v =>
       deleteFilesTable(spark, path, Some(v))
         .withColumn("version", org.apache.spark.sql.functions.lit(v)))
@@ -3510,29 +3142,26 @@ object Snapshots {
     * reference files that left the manifest).
     */
   def binPack(spark: SparkSession, path: String, smallBytes: Long,
-      numFiles: Int = 1): Int = withCommitRetry() {
-    val rs = refsState(path)
-    val head = rs.mainHead(path)
-    val current = readManifest(path, Some(head))
-    val (small, big) = current.partition(_.sizeBytes < smallBytes)
-    if (small.size <= 1) head
+      numFiles: Int = 1): Int = commit(path) { h =>
+    val (small, big) = h.m.files.partition(_.sizeBytes < smallBytes)
+    if (small.size <= 1) None
     else {
-      val rows = GeoTable.applyDeletes(
-        applyEqDeletes(spark, path,
-          applyPosDeletes(spark, path,
-            readFilesDecoded(spark, path, small.map(_.path)), carriedPos(path, head)),
-          carriedEq(path, head), small),
-        carried(path, head))
+      val rows = GeoTable.applyDeletes(readFilesForRewrite(spark, path, small, h.m), h.m.deletes)
       val (added, _) = writeBack(rows.repartition(numFiles), path)
       // all files rewritten → deletes fully materialized; carrying the
       // vacuous state would block Iceberg export (see rewriteDataFiles)
-      val full = big.isEmpty
-      publish(path, rs, big ++ statsFor(spark, path, added),
-        if (full) Nil else carried(path, head),
-        if (full) Nil else carriedPos(path, head),
-        eqDeletes = if (full) Nil else carriedEq(path, head),
-        operation = "replace")
+      replaced(h, big, statsFor(spark, path, added), full = big.isEmpty)
     }
+  }
+
+  /** `h` after a rows-preserving rewrite: `kept` plus `added` files, the
+    * delete state cleared when the rewrite was `full` (it materialized
+    * every pending delete), stamped as a `replace`.
+    */
+  private def replaced(h: Head, kept: Seq[FileStats], added: Seq[FileStats],
+      full: Boolean): Option[Head] = {
+    val m = if (full) cleared(h.m, kept ++ added) else h.m.copy(files = kept ++ added)
+    Some(h.copy(m = m, operation = Some("replace")))
   }
 
   /** Hilbert sort compaction — the reference's `rewrite_data_files` with a
@@ -3543,9 +3172,8 @@ object Snapshots {
     */
   def rewriteCompact(spark: SparkSession, path: String, geomCol: String,
       numFiles: Int, res: Int = GeoTable.DefaultResolution,
-      bounds: (Double, Double, Double, Double) = GeoTable.WorldBounds): Int = withCommitRetry() {
-    val rs = refsState(path)
-    val current = read(spark, path, Some(rs.mainHead(path)))
+      bounds: (Double, Double, Double, Double) = GeoTable.WorldBounds): Int = commit(path) { head =>
+    val current = read(spark, path, Some(head.v))
     val h = GeoTable.hilbertCol(geomCol, res, bounds)
     val clustered = current.withColumn("__hilbert", h)
       .repartitionByRange(numFiles, org.apache.spark.sql.functions.col("__hilbert"))
@@ -3553,7 +3181,7 @@ object Snapshots {
       .drop("__hilbert")
     val (added, _) = writeBack(clustered, path)
     // read() applied pending MoR deletes → the rewrite materializes them
-    publish(path, rs, statsFor(spark, path, added), operation = "replace")
+    replaced(head, Nil, statsFor(spark, path, added), full = true)
   }
 
   /** Iceberg's default target output size for compaction
@@ -3586,109 +3214,105 @@ object Snapshots {
       sortOrder: Seq[(String, Boolean)] = Nil,
       where: Option[Column] = None,
       targetFileSize: Option[Long] = None,
-      zorderCols: Seq[String] = Nil): (Int, Int) = withCommitRetry() {
+      zorderCols: Seq[String] = Nil): (Int, Int) = {
     require(Set("binpack", "sort")(strategy), s"unknown rewrite strategy: $strategy")
     require(strategy != "sort" || sortOrder.nonEmpty || zorderCols.nonEmpty,
       "sort strategy requires sort_order")
     require(zorderCols.isEmpty || sortOrder.isEmpty,
       "zorder(...) and a column sort order are mutually exclusive")
-    val rs = refsState(path)
-    val head = rs.mainHead(path)
-    require(head > 0, s"no snapshots to rewrite at $path")
-    val current = readManifest(path, Some(head))
-    val candidates = where match {
-      case Some(c) => splitByCond(read(spark, path, Some(head)), c, current, path)._1
-      case None => current
+    var rewrote = 0
+    val v = commit(path) { h =>
+      val head = h.v
+      require(head > 0, s"no snapshots to rewrite at $path")
+      val current = h.m.files
+      val candidates = where match {
+        case Some(c) => splitByCond(read(spark, path, Some(head)), c, current, path)._1
+        case None => current
+      }
+      val target = math.max(1L, targetFileSize
+        .orElse(h.props.get("write.target-file-size-bytes").map(_.toLong))
+        .getOrElse(DefaultTargetFileSize))
+      val picked = strategy match {
+        case "sort" => candidates
+        case _ =>
+          val lo = target * 3 / 4
+          val hi = target * 9 / 5
+          val (over, under) = candidates.filter(f => f.sizeBytes < lo || f.sizeBytes > hi)
+            .partition(_.sizeBytes > hi)
+          // a lone small file with no sibling to merge into is already
+          // optimal — UNLESS MoR delete state is pending: materializing it
+          // is this procedure's other contract (and the Iceberg export's
+          // documented unblock), so the rewrite must still happen
+          val pendingMor = h.m.deletes.nonEmpty || h.m.posDeletes.nonEmpty || h.m.eqDeletes.nonEmpty
+          val sized =
+            over ++ (if (under.size >= 2 || (under.nonEmpty && pendingMor)) under else Nil)
+          // a fully in-band candidate set (every file inside [0.75x, 1.8x])
+          // can still carry pending MoR state; size selection alone would
+          // return (head, 0) and the delete state would never materialize.
+          // Rewrite exactly the files the state scopes — not all candidates:
+          // on a well-compacted 100 TB table with one partition's deletes,
+          // only that partition's files move
+          if (sized.nonEmpty || !pendingMor) sized
+          else morScopedFiles(spark, path, h.m, candidates)
+      }
+      rewrote = picked.size
+      if (picked.isEmpty) None
+      else {
+        val pickedPaths = picked.map(_.path).toSet
+        val untouched = current.filterNot(f => pickedPaths(f.path))
+        val rows = GeoTable.applyDeletes(
+          readFilesForRewrite(spark, path, picked, h.m), h.m.deletes)
+        val n = math.max(1, math.ceil(picked.map(_.sizeBytes).sum.toDouble / target).toInt)
+        // zorder(c1,…,cN): range-distribute + sort by ONE interleaved key —
+        // the reference's SparkZOrderDataRewriter (byte-interleave UDF +
+        // range distribution); rows close on every dimension cluster, so
+        // min/max on EACH column tightens per file
+        val sortCols =
+          if (zorderCols.nonEmpty) {
+            graft.functions.GeoSql.install(spark)
+            Seq(graft.functions.GeoSql.zorder_key(
+              zorderCols.map(org.apache.spark.sql.functions.col): _*).asc)
+          } else sortOrder.map { case (c, asc) =>
+            val col = org.apache.spark.sql.functions.col(c); if (asc) col.asc else col.desc
+          }
+        // partitioned tables shape by the partition derivation, or a random
+        // repartition would scatter each dir's rows over all n tasks and the
+        // per-(task, dir) file writer would emit n small files per dir —
+        // the opposite of compaction
+        val partKeys = h.m.specs.map(t => Transforms.writeExpr(t, rows))
+        val shaped =
+          if (strategy == "sort")
+            rows.repartitionByRange(n, (partKeys ++ sortCols): _*)
+              .sortWithinPartitions((partKeys ++ sortCols): _*)
+          else if (partKeys.nonEmpty) rows.repartition(n, partKeys: _*)
+          else rows.repartition(n)
+        val (added, _) = writeBack(shaped, path)
+        // a FULL rewrite materializes every pending delete: the rewritten
+        // rows already exclude them, and carrying the (now-vacuous) delete
+        // state forward would block Iceberg export forever — the export's
+        // "run rewrite_data_files, then export" recipe depends on this.
+        // The same holds for a PARTIAL rewrite whose untouched files are
+        // outside everything the state scopes (the MoR-scoped pick above
+        // produces exactly that shape): predicate deletes can't match the
+        // survivors' stats, positional targets are gone from the manifest,
+        // and equality sequences don't reach the survivors — carrying the
+        // state would be vacuous for reads yet still block export. With any
+        // untouched file still in scope the state must carry.
+        replaced(h, untouched, liveStatsFor(spark, path, added),
+          full = untouched.isEmpty || morScopedFiles(spark, path, h.m, untouched).isEmpty)
+      }
     }
-    val target = math.max(1L, targetFileSize
-      .orElse(readProps(path, Some(head)).get("write.target-file-size-bytes").map(_.toLong))
-      .getOrElse(DefaultTargetFileSize))
-    val picked = strategy match {
-      case "sort" => candidates
-      case _ =>
-        val lo = target * 3 / 4
-        val hi = target * 9 / 5
-        val (over, under) = candidates.filter(f => f.sizeBytes < lo || f.sizeBytes > hi)
-          .partition(_.sizeBytes > hi)
-        // a lone small file with no sibling to merge into is already
-        // optimal — UNLESS MoR delete state is pending: materializing it
-        // is this procedure's other contract (and the Iceberg export's
-        // documented unblock), so the rewrite must still happen
-        val pendingMor = carried(path, head).nonEmpty ||
-          carriedPos(path, head).nonEmpty || carriedEq(path, head).nonEmpty
-        val sized =
-          over ++ (if (under.size >= 2 || (under.nonEmpty && pendingMor)) under else Nil)
-        // a fully in-band candidate set (every file inside [0.75x, 1.8x])
-        // can still carry pending MoR state; size selection alone would
-        // return (head, 0) and the delete state would never materialize.
-        // Rewrite exactly the files the state scopes — not all candidates:
-        // on a well-compacted 100 TB table with one partition's deletes,
-        // only that partition's files move
-        if (sized.nonEmpty || !pendingMor) sized
-        else morScopedFiles(spark, path, head, candidates)
-    }
-    if (picked.isEmpty) (head, 0)
-    else {
-      val pickedPaths = picked.map(_.path).toSet
-      val untouched = current.filterNot(f => pickedPaths(f.path))
-      val rows = GeoTable.applyDeletes(
-        readFilesForRewrite(spark, path, picked, head), carried(path, head))
-      val n = math.max(1, math.ceil(picked.map(_.sizeBytes).sum.toDouble / target).toInt)
-      // zorder(c1,…,cN): range-distribute + sort by ONE interleaved key —
-      // the reference's SparkZOrderDataRewriter (byte-interleave UDF +
-      // range distribution); rows close on every dimension cluster, so
-      // min/max on EACH column tightens per file
-      val sortCols =
-        if (zorderCols.nonEmpty) {
-          graft.functions.GeoSql.install(spark)
-          Seq(graft.functions.GeoSql.zorder_key(
-            zorderCols.map(org.apache.spark.sql.functions.col): _*).asc)
-        } else sortOrder.map { case (c, asc) =>
-          val col = org.apache.spark.sql.functions.col(c); if (asc) col.asc else col.desc
-        }
-      // partitioned tables shape by the partition derivation, or a random
-      // repartition would scatter each dir's rows over all n tasks and the
-      // per-(task, dir) file writer would emit n small files per dir —
-      // the opposite of compaction
-      val partKeys = manifest(path, Some(head)).specs.map(t => Transforms.writeExpr(t, rows))
-      val shaped =
-        if (strategy == "sort")
-          rows.repartitionByRange(n, (partKeys ++ sortCols): _*)
-            .sortWithinPartitions((partKeys ++ sortCols): _*)
-        else if (partKeys.nonEmpty) rows.repartition(n, partKeys: _*)
-        else rows.repartition(n)
-      val (added, _) = writeBack(shaped, path)
-      // a FULL rewrite materializes every pending delete: the rewritten
-      // rows already exclude them, and carrying the (now-vacuous) delete
-      // state forward would block Iceberg export forever — the export's
-      // "run rewrite_data_files, then export" recipe depends on this.
-      // The same holds for a PARTIAL rewrite whose untouched files are
-      // outside everything the state scopes (the MoR-scoped pick above
-      // produces exactly that shape): predicate deletes can't match the
-      // survivors' stats, positional targets are gone from the manifest,
-      // and equality sequences don't reach the survivors — carrying the
-      // state would be vacuous for reads yet still block export. With any
-      // untouched file still in scope the state must carry.
-      val full = untouched.isEmpty ||
-        morScopedFiles(spark, path, head, untouched).isEmpty
-      val v = publish(path, rs, untouched ++ liveStatsFor(spark, path, added),
-        if (full) Nil else carried(path, head),
-        if (full) Nil else carriedPos(path, head),
-        eqDeletes = if (full) Nil else carriedEq(path, head),
-        operation = "replace")
-      (v, picked.size)
-    }
+    (v, rewrote)
   }
 
   /** Roll the table back to an earlier snapshot by republishing its
     * manifest as the new current version (the reference's
     * `rollback_to_snapshot` procedure) — data files are untouched.
     */
-  def rollback(spark: SparkSession, path: String, toVersion: Int): Int = withCommitRetry() {
-    publish(path, refsState(path), readManifest(path, Some(toVersion)),
-      readDeletes(path, Some(toVersion)), readPosDeletes(path, Some(toVersion)),
-      eqDeletes = readEqDeletes(path, Some(toVersion)),
-      schema = readSchema(path, Some(toVersion)))
+  def rollback(spark: SparkSession, path: String, toVersion: Int): Int = commit(path) { h =>
+    val to = manifest(path, Some(toVersion))
+    h.edit(_.copy(files = to.files, deletes = to.deletes, posDeletes = to.posDeletes,
+      eqDeletes = to.eqDeletes, schema = to.schema.orElse(h.m.schema)))
   }
 
   /** `set_current_snapshot`: same mechanics as rollback but allowed to move
@@ -3750,19 +3374,13 @@ object Snapshots {
     val addedDels = delta(pv => readDeletes(path, Some(pv)))
     val addedPos = delta(pv => readPosDeletes(path, Some(pv)))
     val addedEq = delta(pv => readEqDeletes(path, Some(pv)))
-    withCommitRetry() {
-      val rs = refsState(path)
-      val head = rs.mainHead(path)
-      val current = readManifest(path, Some(head))
-      val currentNames = current.map(_.path).toSet
-      val dels = carried(path, head)
-      val pos = carriedPos(path, head)
-      val eqs = carriedEq(path, head)
-      publish(path, rs, current ++ added.filterNot(f => currentNames(f.path)),
-        dels ++ addedDels.filterNot(dels.toSet),
-        pos ++ addedPos.filterNot(pos.toSet),
-        eqDeletes = eqs ++ addedEq.filterNot(eqs.toSet))
-    }
+    commit(path)(_.edit { m =>
+      val currentNames = m.files.map(_.path).toSet
+      m.copy(files = m.files ++ added.filterNot(f => currentNames(f.path)),
+        deletes = m.deletes ++ addedDels.filterNot(m.deletes.toSet),
+        posDeletes = m.posDeletes ++ addedPos.filterNot(m.posDeletes.toSet),
+        eqDeletes = m.eqDeletes ++ addedEq.filterNot(m.eqDeletes.toSet))
+    })
   }
 
   /** Register data files present in the table directory but referenced by
@@ -3773,13 +3391,8 @@ object Snapshots {
     val known = readManifest(path).map(_.path).toSet
     val unregistered = (listDataFiles(spark, path) -- known).toSeq.sorted
     if (unregistered.isEmpty) (mainVersion(path), 0)
-    else withCommitRetry() {
-      val rs = refsState(path)
-      val head = rs.mainHead(path)
-      (publish(path, rs, readManifest(path, Some(head)) ++ statsFor(spark, path, unregistered),
-        carried(path, head), carriedPos(path, head),
-        eqDeletes = carriedEq(path, head)), unregistered.size)
-    }
+    else (commit(path)(_.edit(m => m.copy(files = m.files ++ statsFor(spark, path, unregistered)))),
+      unregistered.size)
   }
 
   /** Drop all but the newest `keep` snapshots and remove data files no
@@ -3922,15 +3535,11 @@ object Snapshots {
     * `addedV` stamps are preserved so equality-delete sequence scoping is
     * unaffected.
     */
-  def rewriteManifests(spark: SparkSession, path: String): Int = withCommitRetry() {
-    val rs = refsState(path)
-    val head = rs.mainHead(path)
-    val current = readManifest(path, Some(head))
-    val byPath = current.map(f => f.path -> f).toMap
-    val fresh = statsFor(spark, path, current.map(_.path))
-      .map(s => s.copy(addedV = byPath(s.path).addedV))
-    publish(path, rs, fresh, carried(path, head), carriedPos(path, head),
-      eqDeletes = carriedEq(path, head))
+  def rewriteManifests(spark: SparkSession, path: String): Int = commit(path) { h =>
+    require(h.v > 0, s"no snapshots at $path")
+    val byPath = h.m.files.map(f => f.path -> f).toMap
+    h.edit(_.copy(files = statsFor(spark, path, h.m.files.map(_.path))
+      .map(s => s.copy(addedV = byPath(s.path).addedV))))
   }
 
   /** Version chain at or below `v` (the reference's `ancestors_of`). */
@@ -3969,19 +3578,16 @@ object Snapshots {
       val src = Paths.get(source, n)
       if (Files.exists(src)) Files.copy(src, Paths.get(target, n))
     }
-    withCommitRetry() {
-      // pin the clone's first version AT the source head: entries keep
-      // their source addedV stamps and eq-deletes their seq stamps, so
-      // the clone's version counter must start past all of them — a clone
-      // restarting at v1 would let cloned seq=8 deletes hide fresh v2
-      // appends, and fresh deletes (seq=2) exempt cloned addedV=5 files
-      // the partition spec too: the clone has no head of its own to carry
-      // it from, and a dropped identity spec would read its column as nulls
-      publish(target, refsState(target), m, srcHead.deletes, srcHead.posDeletes,
-        readProps(source, Some(head)), eqDeletes = srcHead.eqDeletes, schema = srcHead.schema,
-        partsOverride = srcHead.partitions, partHistoryOverride = srcHead.partitionHistory,
-        minVersion = head)
-    }
+    // pin the clone's first version AT the source head: entries keep
+    // their source addedV stamps and eq-deletes their seq stamps, so the
+    // clone's version counter must start past all of them — a clone
+    // restarting at v1 would let cloned seq=8 deletes hide fresh v2
+    // appends, and fresh deletes (seq=2) exempt cloned addedV=5 files. The
+    // partition spec comes along too: the clone has no head of its own to
+    // carry it from, and a dropped identity spec would read its column as
+    // nulls
+    commit(target, minVersion = head)(h =>
+      Some(h.copy(m = srcHead, props = readProps(source, Some(head)))))
   }
 
   /** Compact positional delete files: merge all pending entries, drop
@@ -3989,13 +3595,11 @@ object Snapshots {
     * file (the reference's `rewrite_position_delete_files`). Returns the
     * new version (or the head if there was nothing to compact).
     */
-  def rewritePositionDeleteFiles(spark: SparkSession, path: String): Int = withCommitRetry() {
-    val rs = refsState(path)
-    val head = rs.mainHead(path)
-    val pos = carriedPos(path, head)
-    if (pos.size <= 1) head
+  def rewritePositionDeleteFiles(spark: SparkSession, path: String): Int = commit(path) { h =>
+    val pos = h.m.posDeletes
+    if (pos.size <= 1) None
     else {
-      val live = readManifest(path, Some(head)).map(_.path)
+      val live = h.m.files.map(_.path)
       // absolute entries (Iceberg-imported): exact match on the
       // normalized path — an endsWith against "/" + "/abs/…" would drop
       // every live entry and resurface its deleted rows after compaction
@@ -4008,8 +3612,7 @@ object Snapshots {
       val rows = spark.read.parquet(pos.map(f => s"$path/$f"): _*)
         .filter(keep).dropDuplicates()
       val (name, _) = writeDeleteFile(rows, path, "posdel")
-      publish(path, rs, readManifest(path, Some(head)), carried(path, head),
-        Seq(name), eqDeletes = carriedEq(path, head))
+      h.edit(_.copy(posDeletes = Seq(name)))
     }
   }
 

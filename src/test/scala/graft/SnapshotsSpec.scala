@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GeoCodec
-import graft.spatial.{GeoTable, Snapshots}
+import graft.spatial.{GeoTable, Snapshots, TableOps}
 
 /** Snapshot semantics: append / time travel / copy-on-write DELETE /
   * history / expiration (the reference's Iceberg snapshot surface).
@@ -137,7 +137,7 @@ class SnapshotsSpec extends AnyFunSuite {
       "instead of committing an empty v2 over the winner") {
     graft.spatial.Geo.install(spark)
     val dir = Files.createTempDirectory("graft_create_race").toString
-    def create() = Snapshots.commitCreate(dir,
+    def create() = TableOps.commitCreate(dir,
       _ => GeoTable.manifestJson(Nil, Nil, Nil,
         schema = Some(StructType(Seq(StructField("id", LongType))))),
       failIfExists = true)
@@ -478,12 +478,14 @@ class SnapshotsSpec extends AnyFunSuite {
     // other — the exact interleaving a JVM lock cannot serialize. The CAS
     // is the commit point, so the second publish MUST conflict (the
     // round-3 race committed it silently, dropping the first's files).
-    val stale = Snapshots.refsState(dir)
+    val stale = TableOps.refsState(dir)
     val m = Snapshots.readManifest(dir)
-    val winner = Snapshots.publish(dir, stale, m) // writer A commits first
+    def publish(files: Seq[graft.spatial.FileStats]) = TableOps.commitManifest(dir, stale, "main",
+      v => GeoTable.manifestJson(files.map(_.withAddedV(v))))
+    val winner = publish(m) // writer A commits first
     assert(Snapshots.mainVersion(dir) == winner)
     intercept[Snapshots.CommitConflictException] {
-      Snapshots.publish(dir, stale, m.take(1)) // writer B, stale base
+      publish(m.take(1)) // writer B, stale base
     }
     // B's abandoned version file is cleaned up and the head is A's commit
     assert(Snapshots.mainVersion(dir) == winner)
@@ -528,7 +530,7 @@ class SnapshotsSpec extends AnyFunSuite {
     Files.write(java.nio.file.Paths.get(dir, s"_graft_manifest_v$next.json"),
       winner.getBytes)
     intercept[Snapshots.CommitConflictException] {
-      graft.spatial.Snapshots.atomicWriteManifest(dir, next, "{}".getBytes)
+      TableOps.atomicWriteManifest(dir, next, "{}".getBytes)
     }
     // the winning writer's manifest is untouched
     assert(new String(Files.readAllBytes(
